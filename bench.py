@@ -92,22 +92,14 @@ EXTRA = [
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from engine import registry
-    from engine.io import get_spark
+    from engine.io import apply_bench_confs, harness_session
 
     registry.load_all()
-    from engine.io import apply_bench_confs, shuffle_partitions_for
-
-    # Input-sized shuffle partitioning (see shuffle_partitions_for): at
-    # sf0.1 this is 8 — measured 15-50% off every floor-dominated key vs
-    # the core-count default, no regression on the heavy keys.
-    spark = get_spark(app="bench", shuffle_partitions=shuffle_partitions_for(sf_dir))
-    spark.sparkContext.setLogLevel("ERROR")
-    # Input-sized scan split + AQE toggle, registered as STICKY overrides
-    # (engine/io.py: apply_bench_confs). A bare spark.conf.set here is
-    # undone by the first load_tables cache miss re-applying SESSION_CONF
-    # — which is why every r06 recorded run silently ran AQE-on
-    # (ADVICE r06, high). The override registry survives configure().
-    bench_confs = apply_bench_confs(spark, sf_dir)
+    # Input-sized shuffle partitions, scan split and AQE toggle (see
+    # engine/io.py: apply_bench_confs): at sf0.1 shuffle partitions is 8 —
+    # measured 15-50% off every floor-dominated key vs the core-count
+    # default, no regression on the heavy keys.
+    spark, bench_confs = harness_session(sf_dir, app="bench")
     spark.range(1_000_000).count()  # JVM/codegen warm-up
 
     def bench_at(dir_: str, rounds: int) -> dict[str, list[float]]:
@@ -179,7 +171,7 @@ def main() -> None:
         "tight_spread": tight_spread,
         "tight_value": round(sum(tight[n] for n in hl), 4),
         "sf": sf_val,
-        # what actually ran (sticky overrides — see apply_bench_confs)
+        # what actually ran (see apply_bench_confs)
         "confs": bench_confs,
         # scale-regression telemetry: deeper dup chains ⇒ more
         # label-propagation rounds; watch this grow with sf
@@ -250,7 +242,7 @@ def main() -> None:
         try:
             from pyspark.sql.streaming import StreamingQueryListener
 
-            from engine.io import apply_bench_confs, load_tables
+            from engine.io import load_tables
             from engine.streaming import _cdc_pipeline
 
             progress: list[dict] = []

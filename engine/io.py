@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import os
 import weakref
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,38 +87,42 @@ def tmpdir(prefix: str) -> str:
     return d
 
 
-#: Per-session conf overrides (session → {conf: value}). ``configure``
-#: re-applies SESSION_CONF on every ``load_tables`` cache miss, which used
-#: to silently clobber any bench-harness toggle set between queries (the
-#: r06 AQE tier was a no-op for exactly this reason — ADVICE r06, high).
-#: Overrides registered here WIN over SESSION_CONF on every re-apply, so a
-#: harness decision survives arbitrary configure() calls. Keyed WEAKLY by
-#: the session object (ADVICE r07): an id()-keyed dict never evicted, so a
-#: new session allocated at a dead session's address silently inherited
-#: its overrides (e.g. AQE-off from a prior bench fixture).
-_conf_overrides: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def set_conf_overrides(spark: SparkSession, overrides: dict[str, str]) -> None:
-    """Set runtime confs that persist across ``configure()`` re-applies."""
-    _conf_overrides.setdefault(spark, {}).update(overrides)
-    for k, v in overrides.items():
-        spark.conf.set(k, v)
-
-
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply required runtime confs to an existing session (idempotent).
+    """Apply ``SESSION_CONF`` to an existing session (idempotent).
 
-    Confs registered via :func:`set_conf_overrides` take precedence over
-    ``SESSION_CONF`` — the engine's defaults must not undo an explicit
-    harness decision mid-run.
-    """
-    ov = _conf_overrides.get(spark, {})
+    Runs once per session: from :func:`get_spark` and from the first
+    :func:`load_tables` call on a session built elsewhere (one handed to
+    ``__spark_entry__`` never passes through ``get_spark``, and
+    ``events.ts`` is unreadable without ``nanosAsLong``). It is never
+    re-applied after that, so a conf a harness sets with a bare
+    ``spark.conf.set`` stays in force. The session's ``_tables_cache``
+    entry (below) is the applied-once marker."""
     for k, v in SESSION_CONF.items():
-        spark.conf.set(k, ov.get(k, v))
+        spark.conf.set(k, v)
+    _tables_cache.setdefault(spark, {})
     return spark
+
+
+@contextmanager
+def session_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the body of a ``with`` block, then restore.
+
+    The one way a query changes a session conf: each old value is put
+    back in ``finally`` (a key that had no value before is unset), so no
+    query leaks a conf into the next one, error or not. The confs are
+    session-wide while the block runs, which assumes one query at a time
+    per session (true of every harness in this repo)."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _dir_bytes(sf_dir: str) -> int | None:
@@ -250,13 +256,6 @@ def adaptive_for(sf_dir: str) -> str:
     green with AQE OFF before this helper landed, so the toggle is
     hash-neutral by measurement). Unknown input size → "true" (fail to
     the 100 TB posture).
-
-    NOTE for harnesses: set this via :func:`apply_bench_confs` /
-    :func:`set_conf_overrides`, NOT a bare ``spark.conf.set`` — the first
-    ``load_tables`` cache miss re-applies ``SESSION_CONF`` (AQE on) and
-    silently undoes a bare set. This is exactly what happened to every
-    r06 bench run (ADVICE r06, high): the recorded numbers were all
-    AQE-on despite the harness believing otherwise.
     """
     total = _dir_bytes(sf_dir)
     if total is None:
@@ -265,20 +264,19 @@ def adaptive_for(sf_dir: str) -> str:
 
 
 def apply_bench_confs(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    """Register the three input-sized bench confs as sticky overrides.
+    """Set the three input-sized bench confs for ``sf_dir``.
 
-    One call per (session, fixture) switch in a bench harness: computes
-    shuffle partitions / scan split size / AQE toggle for ``sf_dir`` and
-    installs them via :func:`set_conf_overrides` so no later
-    ``configure()`` can clobber them. Returns the applied dict so the
-    harness can record what actually ran.
+    One call per (session, fixture) switch in a bench harness: shuffle
+    partitions, scan split size and the AQE toggle. Returns the applied
+    dict so the harness can record what actually ran.
     """
     confs = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions_for(sf_dir)),
         "spark.sql.files.maxPartitionBytes": max_partition_bytes_for(sf_dir),
         "spark.sql.adaptive.enabled": adaptive_for(sf_dir),
     }
-    set_conf_overrides(spark, confs)
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     return confs
 
 
@@ -312,6 +310,15 @@ def get_spark(app: str = "engine", shuffle_partitions: int | None = None) -> Spa
     for k, v in SESSION_CONF.items():
         b = b.config(k, v)
     return configure(b.getOrCreate())
+
+
+def harness_session(sf_dir: str, app: str) -> tuple[SparkSession, dict[str, str]]:
+    """The bench-shaped session every timing/plan script starts from:
+    input-sized confs for ``sf_dir`` (:func:`apply_bench_confs`), Spark
+    logging at ERROR. Returns the session and the applied confs."""
+    spark = get_spark(app=app, shuffle_partitions=shuffle_partitions_for(sf_dir))
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark, apply_bench_confs(spark, sf_dir)
 
 
 #: session → {sf_dir → table dict}. DataFrames are immutable lazy plans,
@@ -348,7 +355,9 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     Also registers each table as a temp view ``<name>`` for the SQL entry
     point (SURVEY §3.2). Cached per (session, sf_dir).
     """
-    per_session = _tables_cache.setdefault(spark, {})
+    if spark not in _tables_cache:
+        configure(spark)
+    per_session = _tables_cache[spark]
     cached = per_session.get(sf_dir)
     if cached is not None:
         # temp views must track the ACTIVE sf_dir (SQL-path queries read
@@ -358,7 +367,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
                 df.createOrReplaceTempView(name)
             _views_current[spark] = sf_dir
         return cached
-    configure(spark)
     out: dict[str, DataFrame] = {}
     for name in TABLES:
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

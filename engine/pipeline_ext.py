@@ -183,12 +183,14 @@ def llm_block_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keyed on a SINGLE 64-bit hash silently deletes a distinct block on
     # collision, and the birthday expectation n²/2⁶⁵ crosses 1 at the
     # ~10¹⁰ blocks a 100 TB corpus implies. Hashing twice with different
-    # leading-seed literals gives two independent 64-bit values → a
-    # 16-byte composite key with n²/2¹²⁹ posture (~1.5e-19 at 10¹⁰
-    # blocks), the md5-equivalent guarantee at half md5's key width and
-    # none of its string materialization. Measured same-session: within
-    # noise of the one-seed key at sf0.1 AND sf10, identical output (the
-    # oracle keeps md5 — all three are "group by block equality").
+    # leading-seed literals gives two effectively independent 64-bit
+    # values for natural inputs → a 16-byte composite key with a heuristic
+    # n²/2¹²⁹ posture (~1.5e-19 at 10¹⁰ blocks) at half md5's key width
+    # and none of its string materialization. XXH64 is not cryptographic
+    # and seed-chained variants are not provably pairwise independent, so
+    # this is not a guarantee: the real collision audit is the oracle hash
+    # gate, which groups by md5. Measured same-session: within noise of
+    # the one-seed key at sf0.1 AND sf10, identical output.
     w = Window.partitionBy(
         F.xxhash64("block_text"), F.xxhash64(F.lit(1), "block_text")
     ).orderBy("doc_id", "i")

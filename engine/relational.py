@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.io import load_tables
+from engine.io import load_tables, session_confs
 from engine.registry import query
 
 # ---------------------------------------------------------------------------
@@ -2237,6 +2237,15 @@ def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: join_bloom_prefilter's scoped confs. Bloom injection is skipped for
+#: broadcast-able joins (a broadcast join already avoids shuffling the big
+#: side), so the demo also disables auto-broadcast.
+BLOOM_PREFILTER_CONFS = {
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+
 @query(
     "join_bloom_prefilter",
     oracle="""
@@ -2260,17 +2269,8 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     restored after materialization; tests/test_plans.py asserts the
     injected `might_contain`."""
     t = load_tables(spark, sf_dir)
-    # Bloom injection is skipped for broadcast-able joins (a broadcast
-    # join already avoids shuffling the big side), so the demo also
-    # disables auto-broadcast — both confs restored after materialization.
-    confs = {
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    old = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    # materialize inside the block so the bloom runs under the lowered threshold
+    with session_confs(spark, BLOOM_PREFILTER_CONFS):
         o = t["orders"].where(F.col("o_orderpriority") == "1-URGENT")
         df = (
             t["lineitem"]
@@ -2284,12 +2284,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        # materialize under the lowered threshold so the bloom actually
-        # runs, then restore — the confs must not leak into other queries
         return df.localCheckpoint(eager=True)
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
 
 
 @query(

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.io import load_tables
+from engine.io import load_tables, session_confs
 from engine.registry import query
 
 #: rounds the last llm_dedup_clusters run took to converge (bench telemetry)
@@ -570,9 +570,10 @@ def ivf_parts(
     clustered evidence key (engine/ann_clustered.py). Returns the named
     intermediates so callers can add recall/scan accounting: `ev`
     (non-zero corpus with norms), `q` (queries), `scored` (probed
-    candidates), `mine` (the top-3 result). Expression trees are
-    byte-identical to the pre-refactor llm_ann_ivf body, so the
-    driver-green hash of the base key is unchanged."""
+    candidates), `mine` (the top-3 result). r12 changed the plan (eager
+    checkpoints below, per-row argmin in lloyd_fit), so both keys were
+    re-promoted to tier 0 of the ``__spark_entry__`` verification prefix;
+    the output is oracle-checked, not assumed from an unchanged tree."""
     from engine.llm_ext import lloyd_fit
 
     # Within-run lineage truncation (r12, guide §5 — the pq_parts ev
@@ -1048,56 +1049,45 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    (shrinking) 16 B/row edge list — ~1M edges per reduce partition
     #    is the 100 TB doctrine (§2.2: 100 MB-1 GB per partition) applied
     #    to rows this narrow, and it holds at any scale because the count
-    #    is re-derived per round from the measured n_edges. Restored in
-    #    the finally so no other key inherits the tail sizing; the final
-    #    labels evaluation (corpus-scaled, one row per clustered vector)
-    #    runs at the session's own partitioning.
-    #    NOTE (ADVICE r11): mutating the SESSION-global shuffle.partitions
-    #    mid-loop assumes the single-threaded bench/driver execution model
-    #    — a plan built/evaluated concurrently on the same SparkSession
-    #    while the loop runs would inherit the edge-sized (tiny) count.
-    #    Safe for every harness in this repo (one query at a time); a
-    #    concurrent deployment would repartition ec explicitly per round
-    #    instead of touching session conf.
-    conf = labels.sparkSession.conf
-    sess_parts = conf.get("spark.sql.shuffle.partitions")
-    try:
-        while True:
-            n_edges = ec.count()
-            if n_edges == 0:
-                break
-            if n_edges <= finish_threshold:
-                # residual supernode graph: driver union-find, component-min
-                # labels (identical fixpoint to running contraction to the end)
-                parent: dict = {}
+    #    is re-derived per round from the measured n_edges. Scoped to
+    #    each round's body by session_confs, so no other key inherits the
+    #    tail sizing; the final labels evaluation (corpus-scaled, one row
+    #    per clustered vector) runs at the session's own partitioning.
+    sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    while True:
+        n_edges = ec.count()
+        if n_edges == 0:
+            break
+        if n_edges <= finish_threshold:
+            # residual supernode graph: driver union-find, component-min
+            # labels (identical fixpoint to running contraction to the end)
+            parent: dict = {}
 
-                def find(x: int) -> int:
-                    while parent.get(x, x) != x:
-                        parent[x] = parent.get(parent[x], parent[x])
-                        x = parent[x]
-                    return x
+            def find(x: int) -> int:
+                while parent.get(x, x) != x:
+                    parent[x] = parent.get(parent[x], parent[x])
+                    x = parent[x]
+                return x
 
-                for u, v in ec.collect():
-                    ru, rv = find(u), find(v)
-                    if ru != rv:
-                        # union by min so every root IS its component min
-                        lo, hi = (ru, rv) if ru < rv else (rv, ru)
-                        parent[hi] = lo
-                fin = [(x, find(x)) for x in list(parent)]
-                fmap = labels.sparkSession.createDataFrame(
-                    fin, "lbl_in: long, lbl_out: long"
-                )
-                labels = labels.join(
-                    F.broadcast(fmap), labels["lbl"] == fmap["lbl_in"], "left"
-                ).select(
-                    labels["id"], F.coalesce(fmap["lbl_out"], labels["lbl"]).alias("lbl")
-                )
-                break
-            rounds += 1
-            conf.set(
-                "spark.sql.shuffle.partitions",
-                str(max(1, min(int(sess_parts), n_edges // 1_000_000 + 1))),
+            for u, v in ec.collect():
+                ru, rv = find(u), find(v)
+                if ru != rv:
+                    # union by min so every root IS its component min
+                    lo, hi = (ru, rv) if ru < rv else (rv, ru)
+                    parent[hi] = lo
+            fin = [(x, find(x)) for x in list(parent)]
+            fmap = labels.sparkSession.createDataFrame(
+                fin, "lbl_in: long, lbl_out: long"
             )
+            labels = labels.join(
+                F.broadcast(fmap), labels["lbl"] == fmap["lbl_in"], "left"
+            ).select(
+                labels["id"], F.coalesce(fmap["lbl_out"], labels["lbl"]).alias("lbl")
+            )
+            break
+        rounds += 1
+        parts = str(max(1, min(sess_parts, n_edges // 1_000_000 + 1)))
+        with session_confs(spark, {"spark.sql.shuffle.partitions": parts}):
             sym = ec.unionByName(
                 ec.select(F.col("v").alias("u"), F.col("u").alias("v"))
             )
@@ -1150,8 +1140,6 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .distinct()
                 .localCheckpoint(eager=True)
             )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", sess_parts)
     # telemetry, not result: round count is the quantity that regresses if
     # a bigger corpus produces deeper dup chains (bench.py reports it, the
     # oracle-compared schema stays unchanged)
@@ -1451,7 +1439,12 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # order preserves ida < idb) with O(B²) transient memory;
         # measured 138 → 9.9 s warm min at sf10, identical output
         # (exceptAll = 0), no measurable change at sf0.1 where every
-        # cell fits one block.
+        # cell fits one block. The equivalence is margin-based, not
+        # bit-guaranteed: block shapes change BLAS summation order, so
+        # a cosine within ~1e-15 of τ could flip on another BLAS build.
+        # It holds because the measured margins sit far above that
+        # noise (≥2.8e-7 observed, see the docstring); exceptAll = 0 at
+        # sf0.1 and sf10 on one BLAS build.
         B = 2048
         cell0 = tbl.column("cell")[0].as_py()
         out_a: list[np.ndarray] = []

@@ -58,11 +58,11 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_MAX_RESULT", "16g")
 
     from engine import registry
-    from engine.io import apply_bench_confs, get_spark
+    from engine.io import harness_session
     from tests.oracle import duck_run_df
 
     registry.load_all()
-    spark = get_spark(app="bench-compare")
+    spark, bench_confs = harness_session(sf_dir, app="bench-compare")
     # Arrow-backed toPandas: the DuckDB side materializes its result as a
     # pandas frame (vectorized, native); Spark's row-based .collect()
     # builds one Python Row object per result row, which at ~1M output
@@ -70,10 +70,6 @@ def main() -> None:
     # never spends (measured: win_sessionize sf1 = 1.0 s to a noop sink,
     # 7.8 s to .collect(), 0.5 s to Arrow toPandas). Both engines now
     # land in a pandas DataFrame — symmetric materialization work.
-    # Input-sized shuffle/split/AQE registered as STICKY overrides so the
-    # first load_tables cache miss can't re-apply SESSION_CONF over them
-    # (the r06 AQE-toggle no-op — ADVICE r06, high).
-    bench_confs = apply_bench_confs(spark, sf_dir)
     print(f"confs: {bench_confs}", file=sys.stderr)
 
     rows = []

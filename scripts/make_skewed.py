@@ -26,7 +26,7 @@ that breaks an unsalted shuffle: one reduce task receives a quarter of
 the table while 31 idle. Because the map u→rank is a pure projection of
 event_id, the result is identical however the build is partitioned, and
 DuckDB sees the same parquet bytes, so the skewed dir supports the full
-hash-match oracle protocol (scripts/scaled_parity.py /
+hash-match oracle protocol (scripts/parity.py /
 tests/oracle.compare with sf_dir pointed here).
 
 What it deliberately does NOT preserve: per-user event counts and the

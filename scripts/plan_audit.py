@@ -30,12 +30,10 @@ def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "plans/r11/plan_audit.json"
 
     from engine import registry
-    from engine.io import apply_bench_confs, get_spark, shuffle_partitions_for
+    from engine.io import harness_session
 
     registry.load_all()
-    spark = get_spark(app="plan_audit", shuffle_partitions=shuffle_partitions_for(sf_dir))
-    spark.sparkContext.setLogLevel("ERROR")
-    apply_bench_confs(spark, sf_dir)
+    spark, _ = harness_session(sf_dir, app="plan_audit")
 
     audit: dict[str, dict] = {}
     for key in sorted(registry.QUERIES):

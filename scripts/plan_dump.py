@@ -25,7 +25,7 @@ def main() -> None:
     suffix = os.environ.get("PLAN_SUFFIX", "before")
 
     from engine import registry
-    from engine.io import apply_bench_confs, get_spark, shuffle_partitions_for
+    from engine.io import harness_session
 
     registry.load_all()
     if not keys:
@@ -33,9 +33,7 @@ def main() -> None:
 
         keys = bench.HEADLINE + bench.EXTRA
 
-    spark = get_spark(app="plan_dump", shuffle_partitions=shuffle_partitions_for(sf_dir))
-    spark.sparkContext.setLogLevel("ERROR")
-    apply_bench_confs(spark, sf_dir)
+    spark, _ = harness_session(sf_dir, app="plan_dump")
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out_dir = os.path.join(here, "plans", tag)

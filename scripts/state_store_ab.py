@@ -37,7 +37,7 @@ _HDFS = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProv
 _ROCKS = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 _CHANGELOG = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
-#: provider variant → (providerClass, extra sticky confs). The changelog
+#: provider variant → (providerClass, extra confs). The changelog
 #: variant (r11, VERDICT r10 item 2) measures the claimed mitigation for
 #: RocksDB's write-heavy commit cost: per-batch commit uploads the DELTA
 #: changelog instead of a full snapshot (snapshots move to an async
@@ -80,7 +80,7 @@ def main() -> None:
     from pyspark.sql.streaming import StreamingQueryListener
 
     from engine import registry
-    from engine.io import get_spark, set_conf_overrides, shuffle_partitions_for
+    from engine.io import harness_session
 
     registry.load_all()
 
@@ -121,19 +121,14 @@ def main() -> None:
             pass
 
     for sf_dir in dirs:
-        spark = get_spark(
-            app="state_store_ab", shuffle_partitions=shuffle_partitions_for(sf_dir)
-        )
-        spark.sparkContext.setLogLevel("ERROR")
+        spark, _ = harness_session(sf_dir, app="state_store_ab")
         listener = Progress()
         spark.streams.addListener(listener)
         for prov_name in provider_names:
             prov_cls, extra = PROVIDERS[prov_name]
-            # sticky override: survives load_tables' configure() re-applies
-            set_conf_overrides(
-                spark,
-                {"spark.sql.streaming.stateStore.providerClass": prov_cls, **extra},
-            )
+            confs = {"spark.sql.streaming.stateStore.providerClass": prov_cls, **extra}
+            for k, v in confs.items():
+                spark.conf.set(k, v)
             for key in keys:
                 fn = registry.QUERIES[key]
                 walls = []

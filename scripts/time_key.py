@@ -9,6 +9,7 @@ the inner loop for optimization A/Bs; the scored record stays bench.py.
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -16,48 +17,38 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Warm noop-sink timing per key.", allow_abbrev=False
+    )
+    ap.add_argument("keys", nargs="+", help="registry keys to time")
+    ap.add_argument("--reps", type=int, default=5, help="timed reps per key")
+    return ap.parse_args(argv)
+
+
 def main() -> None:
-    # consume `--reps N` pairs as well as `--reps=N` (ADVICE r11: the
-    # space form used to leave the value token in the key list, where it
-    # was looked up as a query key and raised KeyError)
-    argv = sys.argv[1:]
-    args: list[str] = []
-    reps = 5
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a.startswith("--reps"):
-            if "=" in a:
-                reps = int(a.split("=", 1)[1])
-            else:
-                i += 1
-                reps = int(argv[i])
-        else:
-            args.append(a)
-        i += 1
+    ns = parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from engine import registry
-    from engine.io import apply_bench_confs, get_spark, shuffle_partitions_for
+    from engine.io import harness_session
 
     registry.load_all()
-    spark = get_spark(app="time_key", shuffle_partitions=shuffle_partitions_for(sf_dir))
-    spark.sparkContext.setLogLevel("ERROR")
-    apply_bench_confs(spark, sf_dir)
+    spark, _ = harness_session(sf_dir, app="time_key")
     spark.range(1_000_000).count()  # JVM warm-up
 
-    for key in args:
+    for key in ns.keys:
         fn = registry.QUERIES[key]
         spark.sparkContext.setJobDescription(f"time_key:{key}")
         ts = []
-        for _ in range(reps):
+        for _ in range(ns.reps):
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             ts.append(time.perf_counter() - t0)
         ts.sort()
         print(
             f"{key}: min={ts[0]:.4f} med={ts[len(ts) // 2]:.4f} max={ts[-1]:.4f} "
-            f"reps={reps}"
+            f"reps={ns.reps}"
         )
         spark.sparkContext.setJobDescription(None)
 

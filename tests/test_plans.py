@@ -149,19 +149,14 @@ def test_dpp_prunes_fact_partitions(spark, sf_dir):
 def test_bloom_prefilter_injected(spark, sf_dir):
     """join_bloom_prefilter's shape: with the application-side threshold
     lowered, the selective orders filter must inject a runtime Bloom
-    filter (might_contain) into the lineitem side. Rebuilt here because
-    the query fn restores the conf after materializing."""
-    from engine.io import load_tables
+    filter (might_contain) into the lineitem side. Rebuilt here under the
+    query's own scoped confs because the query fn restores them after
+    materializing."""
+    from engine.io import load_tables, session_confs
+    from engine.relational import BLOOM_PREFILTER_CONFS
     from pyspark.sql import functions as F
 
-    confs = {
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    old = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with session_confs(spark, BLOOM_PREFILTER_CONFS):
         t = load_tables(spark, sf_dir)
         o = t["orders"].where(F.col("o_orderpriority") == "1-URGENT")
         df = (
@@ -174,10 +169,7 @@ def test_bloom_prefilter_injected(spark, sf_dir):
         s = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
-        assert "might_contain" in s, "runtime bloom filter not injected"
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
+    assert "might_contain" in s, "runtime bloom filter not injected"
 
 
 def test_q3_pushes_both_date_filters(spark, sf_dir):
@@ -789,33 +781,65 @@ def test_adaptive_tier_boundaries():
             shutil.rmtree(d, ignore_errors=True)
 
 
-def test_conf_overrides_survive_configure(spark):
-    """The r06 AQE-toggle no-op (ADVICE r06, high): a bench harness sets
-    adaptive.enabled='false', then the first load_tables cache miss calls
-    configure(), which re-applies SESSION_CONF and silently turns AQE back
-    on before any timed rep. Overrides registered via set_conf_overrides
-    must WIN over SESSION_CONF on every configure() re-apply — this is
-    what makes the recorded bench confs the confs that actually ran."""
+def test_session_conf_applied_once(spark, sf_dir, monkeypatch, tmp_path):
+    """SESSION_CONF is applied once per session, on its first load_tables
+    call, and never again: a conf a harness sets with a bare
+    ``spark.conf.set`` (AQE off, as apply_bench_confs does on small
+    fixtures) must survive a later load_tables cache miss. The r06 bug
+    was that cache miss re-applying SESSION_CONF and turning AQE back on."""
+    import os
+
     from engine import io
 
+    calls = []
+    configure = io.configure
+    monkeypatch.setattr(io, "configure", lambda s: calls.append(s) or configure(s))
+    s2 = spark.newSession()
     key = "spark.sql.adaptive.enabled"
-    orig = spark.conf.get(key)
-    try:
-        # a bare conf.set is clobbered (the r06 bug, kept as documentation)
-        spark.conf.set(key, "false")
-        io.configure(spark)
-        assert spark.conf.get(key) == "true"
-        # an override survives configure()
-        io.set_conf_overrides(spark, {key: "false"})
-        assert spark.conf.get(key) == "false"
-        io.configure(spark)
-        assert spark.conf.get(key) == "false"
-        # and survives a load_tables cache miss (fresh sf_dir tuple key)
-        io.load_tables(spark, "/root/testdata/sf0.001")
-        assert spark.conf.get(key) == "false"
-    finally:
-        io._conf_overrides.pop(spark, None)
-        spark.conf.set(key, orig)
+    io.load_tables(s2, sf_dir)
+    assert calls == [s2] and s2.conf.get(key) == "true"
+    s2.conf.set(key, "false")
+    # a fresh fixture dir: the same tables under a path no session has seen
+    for name in io.TABLES:
+        (tmp_path / f"{name}.parquet").symlink_to(os.path.join(sf_dir, f"{name}.parquet"))
+    io.load_tables(s2, str(tmp_path))
+    assert s2.conf.get(key) == "false", "a cache miss re-applied SESSION_CONF"
+    assert calls == [s2], "configure ran more than once for one session"
+
+
+def test_session_confs_restores_on_error(spark):
+    """session_confs puts every old value back even when the body raises,
+    and unsets a key that had no value before it."""
+    import pytest
+
+    from engine.io import session_confs
+
+    set_key, new_key = "spark.sql.shuffle.partitions", "spark.graft.test.scoped"
+    before = spark.conf.get(set_key)
+    with pytest.raises(RuntimeError):
+        with session_confs(spark, {set_key: "3", new_key: "x"}):
+            assert spark.conf.get(set_key) == "3"
+            assert spark.conf.get(new_key) == "x"
+            raise RuntimeError("query failed mid-block")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(new_key, None) is None
+
+
+def test_time_key_args():
+    """scripts/time_key.py: a trailing --reps is a usage error (it used to
+    raise IndexError), --reps N parses, and no other --reps* spelling is
+    swallowed as the reps flag."""
+    import pytest
+
+    from scripts import time_key
+
+    ns = time_key.parse_args(["agg_pricing_summary", "--reps", "3"])
+    assert ns.keys == ["agg_pricing_summary"] and ns.reps == 3
+    assert time_key.parse_args(["a", "b"]).reps == 5
+    for argv in (["agg_pricing_summary", "--reps"], ["agg_pricing_summary", "--repsx", "2"]):
+        with pytest.raises(SystemExit) as exc:
+            time_key.parse_args(argv)
+        assert exc.value.code == 2
 
 
 def test_pagerank_fact_pass_runs_once(spark, sf_dir):
