@@ -34,21 +34,20 @@ def entry(spark: SparkSession) -> DataFrame:
 # Keys whose implementation changed THIS round — their recorded driver
 # evidence is stale by construction, so they jump the queue regardless of
 # past green rows (the ADVICE-r05 staleness lesson: a changed key must
-# never coast on its old rank). The r11 list (all 16 re-passed their
-# driver rows in CORRECTNESS_r11) is retired.
-_PROMOTED_R12 = [
-    # r12 OPTIMIZATION round: every key whose physical implementation
-    # changed (OPTIMIZATION_r12.md) — outputs proven identical locally
-    # (same-session exceptAll checks + oracle parity at up to 3 scales),
-    # but changed keys never coast on their old driver rank:
-    "llm_substring_dedup",       # single-pass gram verdict (1 Generate)
-    "llm_block_dedup",           # two-seed xxhash64 window key (128-bit)
-    "llm_kmeans_lloyd",          # per-row array_min argmin scoring
-    "llm_ann_ivf",               # shared lloyd_fit + ivf_parts checkpoints
-    "llm_ann_pq",                # per-subspace codes argmin + dim guard
-    "llm_ann_ivf_clustered",     # corpus/m checkpoints + shared helpers
-    "llm_ann_pq_clustered",      # corpus/m checkpoints + shared helpers
-    "llm_semdedup",              # blocked cell verifier
+# never coast on its old rank). The r12 list (all 8 re-passed their
+# driver rows; CORRECTNESS_r12 was 50/50) is retired.
+_PROMOTED_R13 = [
+    # one τ-pair kernel + one home for the cosine Column helpers and the
+    # label-centroid builder — outputs proven identical locally
+    # (exceptAll both ways against the parent at sf0.1 and sf1 + oracle
+    # parity), but changed keys never coast on their old driver rank:
+    "llm_near_dedup_embedding",  # shared kernel; oracle from the one CTE
+    "llm_dedup_clusters",        # shared kernel; _dup_edges inlined
+    "llm_banding_recall_report", # shared kernel; oracle from the one CTE
+    "llm_semdedup",              # shared kernel + _label_centroids
+    "llm_cosine_topk",           # _label_centroids + llm_ext helpers
+    "llm_embed_norm",            # _norm2 moved to llm_ext
+    "fn_array_hof",              # norm² via llm_ext._norm2
 ]
 
 def _coverage_rank() -> tuple[dict[str, int], dict[str, int]]:
@@ -91,7 +90,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     driver's fixed-prefix check lands on the keys that need it most:
 
     tier 0: keys whose implementation changed since their last driver
-            row (_PROMOTED_R12) — their green rows are stale evidence;
+            row (_PROMOTED_R13) — their green rows are stale evidence;
     tier 3: previously rows-only keys that NOW carry a hash oracle
             (re-check upgrades r01/r02 recorded as weaker evidence);
     tier 4: never-driver-checked keys in name order (16 remain after
@@ -103,7 +102,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             adds no evidence).
     """
     rank, last_pass = _coverage_rank()
-    promoted = {k: i for i, k in enumerate(_PROMOTED_R12)}
+    promoted = {k: i for i, k in enumerate(_PROMOTED_R13)}
 
     def sort_key(item: tuple[str, Callable]) -> tuple[int, int, str]:
         name = item[0]

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.io import load_tables
+from engine.llm_ext import _dbl, _norm2
 from engine.registry import query
 
 
@@ -445,15 +446,14 @@ def fn_array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold lands within one ulp of a half-boundary (esum -0.0001 vs -0.0
     at sf1, caught by the r07 full-registry sf1 parity sweep)."""
     e = load_tables(spark, sf_dir)["embeddings"]
-    dbl = F.transform("embedding", lambda x: x.cast("double"))
-    prods = F.zip_with(dbl, dbl, lambda x, y: x * y)
+    dbl = _dbl("embedding")
 
     def snap4(col: F.Column) -> F.Column:
         return F.floor(col * 10000 + F.lit(0.5)).cast("double") / 10000
 
     return e.select(
         "vec_id",
-        snap4(F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)).alias("norm2"),
+        snap4(_norm2("embedding")).alias("norm2"),
         F.size(F.filter("embedding", lambda x: x > 0)).alias("n_pos"),
         snap4(F.aggregate(dbl, F.lit(0.0), lambda acc, x: acc + x)).alias("esum"),
     )

@@ -28,6 +28,11 @@ _ITERS = 3
 _DIM = 64
 
 
+# The one home of the cosine Column helpers for every embedding module:
+# this module imports only io and registry, so any of them can import it
+# without a cycle.
+
+
 def _dbl(col):
     return F.transform(col, lambda x: x.cast("double"))
 
@@ -39,6 +44,24 @@ def _dot(a, b):
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+def _norm2(col: str = "embedding"):
+    """Squared L2 norm of a float array column, folded in double."""
+    return _dot(_dbl(col), _dbl(col))
+
+
+def _label_centroids(e: DataFrame) -> DataFrame:
+    """(c_label, centroid): the unrounded per-label mean vector —
+    posexplode, avg per (label, pos), then the averages collected in
+    position order (no whole-vector UDAF)."""
+    ex = e.select("label", F.posexplode("embedding").alias("pos", "val"))
+    avgs = ex.groupBy("label", "pos").agg(F.avg(F.col("val").cast("double")).alias("a"))
+    return avgs.groupBy("label").agg(
+        F.transform(F.array_sort(F.collect_list(F.struct("pos", "a"))), lambda s: s["a"]).alias(
+            "centroid"
+        )
+    ).select(F.col("label").alias("c_label"), "centroid")
 
 
 def kmeans_cte_parts(k: int, iters: int, source: str = "embeddings") -> list[str]:

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.io import load_tables
+from engine.llm_ext import _dbl, _dot, _label_centroids, _norm2
 from engine.registry import query
 
 # ---------------------------------------------------------------------------
@@ -487,11 +488,6 @@ def llm_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _norm2(col: str = "embedding"):
-    dbl = F.transform(col, lambda x: x.cast("double"))
-    return F.aggregate(F.zip_with(dbl, dbl, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-
-
 @query(
     "llm_embed_norm",
     oracle="""
@@ -628,24 +624,10 @@ def llm_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     margin on the fixture is ≥1e-4, orders of magnitude above fp noise.
     The raw cosine stays engine-side, range-asserted into cos_in_range."""
     e = load_tables(spark, sf_dir)["embeddings"]
-    # unrounded centroids, rebuilt inline (llm_centroids rounds for its oracle)
-    ex = e.select("label", F.posexplode("embedding").alias("pos", "val"))
-    avgs = ex.groupBy("label", "pos").agg(F.avg(F.col("val").cast("double")).alias("a"))
-    cents = avgs.groupBy("label").agg(
-        F.transform(F.array_sort(F.collect_list(F.struct("pos", "a"))), lambda s: s["a"]).alias(
-            "centroid"
-        )
-    ).select(F.col("label").alias("c_label"), "centroid")
-
-    dbl = F.transform("embedding", lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(dbl, F.col("centroid"), lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-    cnorm = F.sqrt(
-        F.aggregate(
-            F.zip_with("centroid", "centroid", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-        )
-    )
+    # unrounded centroids over ALL rows (llm_centroids rounds for its oracle)
+    cents = _label_centroids(e)
+    dot = _dot(_dbl("embedding"), F.col("centroid"))
+    cnorm = F.sqrt(_dot("centroid", "centroid"))
     # zero-norm vectors excluded on both sides (no direction — the
     # division would raise under ANSI; tests/test_edge_embeddings.py)
     scored = (

@@ -21,10 +21,12 @@ import sys
 
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.io import load_tables, session_confs
+from engine.llm_ext import _dbl, _dot, _label_centroids, _norm2, kmeans_cte_parts, lloyd_fit
 from engine.registry import query
 
 #: rounds the last llm_dedup_clusters run took to converge (bench telemetry)
@@ -77,14 +79,6 @@ def _lsh_salts(n: int) -> int:
     it (measured at sf100 — see llm_ann_lsh docstring). Salting is
     result-identical by construction, so this is a pure physical knob."""
     return 1 if n < 500_000 else 8
-
-
-def _dbl(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
 def _spark_bucket(emb_col: str, planes: list[list[float]] | None = None):
@@ -491,7 +485,6 @@ def ivf_oracle_ctes(
     in `mine(qid, nid, cos, rn)` — shared by llm_ann_ivf's oracle and
     the clustered evidence key (engine/ann_clustered.py), which appends
     recall/scan accounting on top."""
-    from engine.llm_ext import kmeans_cte_parts
 
     parts = kmeans_cte_parts(cells, iters, source)
     last = iters
@@ -574,7 +567,6 @@ def ivf_parts(
     checkpoints below, per-row argmin in lloyd_fit), so both keys were
     re-promoted to tier 0 of the ``__spark_entry__`` verification prefix;
     the output is oracle-checked, not assumed from an unchanged tree."""
-    from engine.llm_ext import lloyd_fit
 
     # Within-run lineage truncation (r12, guide §5 — the pq_parts ev
     # precedent): every relation below feeds MULTIPLE consumers (cents →
@@ -717,9 +709,10 @@ def _band_ids_udf():
 #: concentrated bucket went quadratic). The cap is far above any real
 #: duplicate-cluster size, so recall on actual duplicates is unaffected —
 #: an over-full bucket means the band is too coarse for the local density,
-#: and its pairs are overwhelmingly false candidates. Mirrored in the
+#: and its pairs are overwhelmingly false candidates. Applied by
+#: _banded_tau_pairs (the kernel's ``cap``) and interpolated into the
 #: oracle SQL (msz/mc CTEs); a no-op at fixture scale by construction.
-#: It also bounds _banded_tau_pairs' per-group matmul block (≤512×512).
+#: A capped bucket fits one kernel block, so it is one 512×512 matmul.
 _BUCKET_CAP = 512
 
 #: llm_dedup_clusters' driver-finish threshold (edges): once the CONTRACTED
@@ -735,35 +728,32 @@ def _banded_melt(e: DataFrame, with_embedding: bool = False) -> DataFrame:
     vectorized pass, posexploded to the long form the per-bucket verifier
     consumes.
 
-    The _BUCKET_CAP guard is NOT applied here (r03): it used to be a
-    groupBy-count + broadcast-join pre-filter, which shuffled every melt
-    row once to count it and once again into the verification groups.
-    The verifier groups by (band, bv) anyway, so the cap check moved
-    inside the per-bucket block (_banded_tau_pairs drops over-full
-    groups on arrival) — identical candidate set, one exchange instead
-    of two on the melt.
+    The _BUCKET_CAP guard is not applied here: _banded_tau_pairs groups
+    by (band, bv) anyway and its kernel drops over-full groups on
+    arrival, so the melt crosses one exchange, not a count pre-filter
+    plus the verify exchange.
 
     ``with_embedding`` carries the raw vector through the posexplode so
-    the verifier needs no join back onto the corpus (r11): the exploded
-    rows ship the same bytes into the (band, bv) exchange either way,
-    and dropping the join removes a broadcast build + hash probe over
-    every melt row (measured part of the sf1 verify cost)."""
+    the verifier needs no join back onto the corpus: the exploded rows
+    ship the same bytes into the (band, bv) exchange either way, and no
+    broadcast build + hash probe runs over every melt row."""
     cols = ["vec_id"] + (["embedding"] if with_embedding else [])
     ids = e.select(*cols, _band_ids_udf()("embedding").alias("bands"))
     return ids.select(*cols, F.posexplode("bands").alias("band", "bv"))
 
 
-@query(
-    "llm_near_dedup_embedding",
-    oracle=f"""
-    WITH b AS (
+#: The banded-candidate oracle shared by every LSH-dedup key: melt (b, m)
+#: → capped buckets (msz, mc) → distinct same-bucket pairs (cand) → their
+#: exact cosine (pairs). Each oracle filters pairs on cos ≥ τ itself.
+_DUP_PAIR_SQL_CTE = f"""
+    b AS (
       SELECT vec_id, embedding,
              {_BAND_SQL_COLS}
       FROM embeddings
     ), m AS (
       {_BAND_SQL_MELT}
     ), msz AS (
-      SELECT band, bv FROM m GROUP BY band, bv HAVING count(*) <= 512
+      SELECT band, bv FROM m GROUP BY band, bv HAVING count(*) <= {_BUCKET_CAP}
     ), mc AS (
       SELECT m.* FROM m JOIN msz USING (band, bv)
     ), cand AS (
@@ -775,7 +765,13 @@ def _banded_melt(e: DataFrame, with_embedding: bool = False) -> DataFrame:
       FROM cand c
       JOIN embeddings ea ON ea.vec_id = c.id_a
       JOIN embeddings eb ON eb.vec_id = c.id_b
-    )
+    )"""
+
+
+@query(
+    "llm_near_dedup_embedding",
+    oracle=f"""
+    WITH {_DUP_PAIR_SQL_CTE}
     SELECT id_b AS drop_id, min(id_a) AS keep_id,
            round(arg_min(cos, id_a), 6) AS cos
     FROM pairs WHERE cos >= {_NEAR_DUP_TAU} GROUP BY id_b
@@ -793,9 +789,9 @@ def llm_near_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow bands: measured 0.715 at sf0.1 vs brute force at 1.53× the
     candidates of r02's 12-band scheme (see _BANDS note + BENCH.md). Band ids come
     from one vectorized Arrow matmul (_band_ids_udf); candidate pairs are
-    verified PER BUCKET with a normalized-matmul applyInPandas block
-    (_banded_tau_pairs) — vectors cross into Python once per (vector,
-    band), never once per pair. At 100 TB: band melt is a projection (no
+    verified PER BUCKET by the shared τ-pair kernel (_banded_tau_pairs)
+    — vectors cross into Python once per (vector, band), never once per
+    pair. At 100 TB: band melt is a projection (no
     shuffle), the bucket groupBy shuffles on (band, bucket) — add bits
     per band as the corpus grows to keep bucket sizes bounded (the
     _BUCKET_CAP fuse drops what still concentrates); the verdict agg
@@ -812,32 +808,83 @@ def llm_near_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DUP_PAIR_SQL_CTE = f"""
-    b AS (
-      SELECT vec_id, embedding,
-             {_BAND_SQL_COLS}
-      FROM embeddings
-    ), m AS (
-      {_BAND_SQL_MELT}
-    ), msz AS (
-      SELECT band, bv FROM m GROUP BY band, bv HAVING count(*) <= 512
-    ), mc AS (
-      SELECT m.* FROM m JOIN msz USING (band, bv)
-    ), cand AS (
-      SELECT DISTINCT a.vec_id AS id_a, x.vec_id AS id_b
-      FROM mc a JOIN mc x ON a.band = x.band AND a.bv = x.bv AND a.vec_id < x.vec_id
-    ), pairs AS (
-      SELECT c.id_a, c.id_b,
-             {_sql_cos('ea.embedding', 'eb.embedding')} AS cos
-      FROM cand c
-      JOIN embeddings ea ON ea.vec_id = c.id_a
-      JOIN embeddings eb ON eb.vec_id = c.id_b
-    )"""
+#: Row block of _tau_pair_kernel's upper-triangle scan: ≤2048² doubles
+#: (32 MB) of transient cosine matrix per block, whatever the group size.
+_PAIR_BLOCK = 2048
+
+# The applyInArrow verifiers call the module-level _tau_pair_kernel, and
+# Python workers need not be able to import this package (the driver
+# contract runs from any directory). Functions of this module are
+# therefore shipped by value, never as an ``engine.similarity`` import.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def _tau_pair_kernel(tbl, cap: int | None = None):
+    """(ids_a, ids_b, cos) numpy arrays: every pair of one Arrow group
+    (columns ``vec_id``, ``embedding``) with cosine ≥ _NEAR_DUP_TAU,
+    ids_a < ids_b. The one τ-pair verifier: _banded_tau_pairs runs it
+    per LSH bucket (capped at _BUCKET_CAP), llm_semdedup per centroid
+    cell (uncapped). A group of fewer than 2 rows or more than ``cap``
+    rows yields no pairs.
+
+    The list column is flattened with ONE zero-copy buffer view (a
+    ragged group raises ValueError), upcast to float64, sorted by id and
+    row-normalized. The upper triangle is then scanned in _PAIR_BLOCK-row
+    blocks: the diagonal block by matmul + triu mask, the later blocks of
+    the same rows by matmul + nonzero. Ids ascend, so block order keeps
+    ids_a < ids_b; a group of ≤ _PAIR_BLOCK rows is one matmul.
+
+    Float equivalence across block layouts is margin-based, not
+    bit-guaranteed: block shapes set the BLAS summation order, so a
+    cosine within ~1e-15 of τ could flip on another layout or BLAS
+    build. The measured margins sit far above that noise: over ALL
+    non-zero pairs the cosine closest to τ is 1.2e-6 away at sf0.1 and
+    4.4e-8 at sf1, and exceptAll = 0 held at sf0.1, sf1 and sf10 on one
+    BLAS build."""
+    import numpy as np
+
+    ids = tbl.column("vec_id").to_numpy()
+    n = len(ids)
+    if n < 2 or (cap is not None and n > cap):
+        none = np.empty(0, dtype=np.int64)
+        return none, none, np.empty(0)
+    emb = tbl.column("embedding").combine_chunks()
+    lens = np.diff(emb.offsets.to_numpy())
+    if not (lens == lens[0]).all():  # ragged input must fail loudly
+        raise ValueError(f"ragged embedding lengths in group: {set(lens)}")
+    mat = (
+        emb.flatten()
+        .to_numpy(zero_copy_only=False)
+        .astype(np.float64, copy=False)
+        .reshape(n, -1)
+    )
+    order = np.argsort(ids)
+    ids = ids[order]
+    mat = mat[order]
+    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    tau, B = _NEAR_DUP_TAU, _PAIR_BLOCK
+    out_a, out_b, out_c = [], [], []
+    for i0 in range(0, n, B):
+        bi = mat[i0 : i0 + B]
+        iu = np.triu_indices(len(bi), k=1)
+        c = (bi @ bi.T)[iu]
+        keep = c >= tau
+        out_a.append(ids[i0 + iu[0][keep]])
+        out_b.append(ids[i0 + iu[1][keep]])
+        out_c.append(c[keep])
+        for j0 in range(i0 + B, n, B):
+            c = bi @ mat[j0 : j0 + B].T
+            ii, jj = np.nonzero(c >= tau)
+            out_a.append(ids[i0 + ii])
+            out_b.append(ids[j0 + jj])
+            out_c.append(c[ii, jj])
+    return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_c)
 
 
 def _banded_tau_pairs(e: DataFrame) -> DataFrame:
     """(id_a < id_b, cos) for every same-bucket pair with cos ≥ τ —
-    verified PER BUCKET with applyInPandas instead of materializing the
+    verified PER BUCKET by _tau_pair_kernel (applyInArrow over the
+    (band, bv) groups of _banded_melt) instead of materializing the
     candidate pair list.
 
     Why: in a dense/weak-similarity regime the candidate count is
@@ -845,83 +892,30 @@ def _banded_tau_pairs(e: DataFrame) -> DataFrame:
     onto every candidate row ships O(|pairs|·dim) through Arrow (measured
     ~38 GB at the 10× fixture — 37M candidates — taking 25-150 s). Here
     each (band, bucket) group arrives ONCE per member vector
-    (O(n·bands·dim) transfer, ~120 MB at 10×), computes its full cosine
-    block with one normalized matmul, and emits only the τ-passing pairs.
-    _BUCKET_CAP bounds the group (≤512 rows → ≤16 MB of C matrix), so no
-    group can blow worker memory. Cross-band duplicate pairs collapse via
-    groupBy min(cos) — the same pair's cosine can differ in final ulps
-    between bands' matmul blockings, min makes the survivor
-    deterministic; at 6dp rounding the variants agree anyway.
-
-    r11 physical rework (guide §4.2, output-identical): the verifier is
-    ``applyInArrow`` instead of ``applyInPandas``, and the embedding
-    rides the melt instead of joining back on. The pandas form converted
-    every (vector, band) cell list→ndarray one row at a time
-    (``Series.apply(np.asarray)``) — at sf1 that is 400k per-row Python
-    conversions and was the bulk of the verify stage (measured: verify
-    ~12.8 s of the 17 s pair pass). The Arrow form flattens each group's
-    list column with ONE zero-copy buffer view (offsets-checked) and
-    reshapes; the float32→float64 upcast, row ordering, normalization
-    and matmul are bit-identical to the pandas form, so the pair set and
-    cosines are unchanged (same oracle)."""
-    import numpy as np
+    (O(n·bands·dim) transfer, ~120 MB at 10×) and emits only the
+    τ-passing pairs. The kernel drops groups above _BUCKET_CAP, so no
+    group holds more than a 512×512 cosine block. Cross-band duplicate
+    pairs collapse via groupBy min(cos) — the same pair's cosine can
+    differ in final ulps between buckets of different sizes, min makes
+    the survivor deterministic; at 6dp rounding the variants agree."""
     import pyarrow as pa
 
-    m = _banded_melt(e, with_embedding=True)
-    tau = _NEAR_DUP_TAU
-    _empty = pa.table(
-        {
-            "id_a": pa.array([], pa.int64()),
-            "id_b": pa.array([], pa.int64()),
-            "cos": pa.array([], pa.float64()),
-        }
-    )
-
     def bucket_pairs(tbl: "pa.Table") -> "pa.Table":
-        ids = tbl.column("vec_id").to_numpy()
-        n = len(ids)
-        # _BUCKET_CAP skew guard, applied on group arrival (see
-        # _banded_melt): an over-full bucket is all false candidates
-        if n > _BUCKET_CAP or n < 2:
-            return _empty
-        emb = tbl.column("embedding").combine_chunks()
-        lens = np.diff(emb.offsets.to_numpy())
-        if not (lens == lens[0]).all():  # ragged input must fail loudly
-            raise ValueError(f"ragged embedding lengths in bucket: {set(lens)}")
-        mat = (
-            emb.flatten()
-            .to_numpy(zero_copy_only=False)
-            .astype(np.float64, copy=False)
-            .reshape(n, -1)
-        )
-        order = np.argsort(ids)
-        ids = ids[order]
-        mat = mat[order]
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        c = mat @ mat.T
-        iu = np.triu_indices(n, k=1)
-        keep = c[iu] >= tau
+        ida, idb, cos = _tau_pair_kernel(tbl, _BUCKET_CAP)
         return pa.table(
             {
-                "id_a": pa.array(ids[iu[0][keep]], pa.int64()),
-                "id_b": pa.array(ids[iu[1][keep]], pa.int64()),
-                "cos": pa.array(c[iu][keep], pa.float64()),
+                "id_a": pa.array(ida, pa.int64()),
+                "id_b": pa.array(idb, pa.int64()),
+                "cos": pa.array(cos, pa.float64()),
             }
         )
 
-    pairs = m.groupBy("band", "bv").applyInArrow(
-        bucket_pairs, "id_a long, id_b long, cos double"
+    pairs = (
+        _banded_melt(e, with_embedding=True)
+        .groupBy("band", "bv")
+        .applyInArrow(bucket_pairs, "id_a long, id_b long, cos double")
     )
     return pairs.groupBy("id_a", "id_b").agg(F.min("cos").alias("cos"))
-
-
-def _dup_edges(e: DataFrame) -> DataFrame:
-    """(id_a < id_b) near-duplicate edges: banded-LSH candidates → exact
-    cosine ≥ τ. Same formulation as llm_near_dedup_embedding's pair stage
-    (per-bucket matmul verification, see _banded_tau_pairs)."""
-    return _banded_tau_pairs(e).select(
-        F.col("id_a").alias("u"), F.col("id_b").alias("v")
-    )
 
 
 def _clusters_oracle(rounds: int) -> str:
@@ -1016,7 +1010,11 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ec: UNDIRECTED unique edges (u < v) — half the rows of a symmetric
     # list; the symmetric view needed for neighborhood mins is a zero-cost
     # union at use time, so each round pays exactly ONE distinct
-    ec = _dup_edges(e).localCheckpoint(eager=True)
+    ec = (
+        _banded_tau_pairs(e)
+        .select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        .localCheckpoint(eager=True)
+    )
     sym = ec.unionByName(ec.select(F.col("v").alias("u"), F.col("u").alias("v")))
     labels = sym.select("u").distinct().select(
         F.col("u").alias("id"), F.col("u").alias("lbl")
@@ -1338,8 +1336,10 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the argmax assignment (the llm_cosine_topk shape — tie-free by the
     measured min best-vs-second margin: 2.8e-5 at sf0.1, 2.8e-7 at
     sf10, both ≫ the ~1e-15 summation-order noise floor), and
-    each cell verifies pairwise cosine with ONE normalized matmul per
-    group (applyInPandas — same per-group pattern as _banded_tau_pairs).
+    each cell verifies pairwise cosine with the shared τ-pair kernel
+    (_tau_pair_kernel via applyInArrow, uncapped): a cell is n/k of the
+    corpus (20k vectors at sf10), and the kernel's 2048-row blocks keep
+    its transient matrix at O(block²) (sf10 warm min 9.9 s).
     At 100 TB the cell count scales with k ∝ n so cells stay bounded
     (real SemDeDup uses k ≈ n/10k); here cells are the 10 fixture-label
     centroids. NB the isotropy finding that forced llm_ann_ivf onto
@@ -1350,126 +1350,35 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     not duplicate recall. Verdicts carry no float — drop_id/keep_id/cell
     hash exactly."""
     import numpy as np
+    import pyarrow as pa
 
     # zero-norm vectors carry no direction — excluded from centroid
     # building, assignment, and verification on both sides
-    e = load_tables(spark, sf_dir)["embeddings"].where(
-        _dot(_dbl("embedding"), _dbl("embedding")) > 0
-    )
-    ex = e.select("label", F.posexplode("embedding").alias("pos", "val"))
-    avgs = ex.groupBy("label", "pos").agg(
-        F.avg(F.col("val").cast("double")).alias("a")
-    )
-    cents = (
-        avgs.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "a"))), lambda s: s["a"]
-            ).alias("centroid")
-        )
-        .select(F.col("label").alias("c_label"), "centroid")
-    )
-    dbl = F.transform("embedding", lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(dbl, F.col("centroid"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    nrm = F.sqrt(
-        F.aggregate(
-            F.zip_with(dbl, dbl, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    cnrm = F.sqrt(
-        F.aggregate(
-            F.zip_with("centroid", "centroid", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    )
+    e = load_tables(spark, sf_dir)["embeddings"].where(_norm2("embedding") > 0)
+    cents = _label_centroids(e)
+    cnrm = F.sqrt(_dot("centroid", "centroid"))
     w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), "c_label")
     assign = (
         e.crossJoin(F.broadcast(cents))
         .where(cnrm > 0)
-        .withColumn("cos", dot / (nrm * cnrm))
+        .withColumn(
+            "cos",
+            _dot(_dbl("embedding"), F.col("centroid"))
+            / (F.sqrt(_norm2("embedding")) * cnrm),
+        )
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select("vec_id", "embedding", F.col("c_label").alias("cell"))
     )
-    tau = _NEAR_DUP_TAU
-    # applyInArrow (r11, same rework as _banded_tau_pairs): one zero-copy
-    # flatten per cell instead of a per-row list→ndarray conversion; the
-    # float math is bit-identical so verdicts (and the oracle) are unchanged
-    import pyarrow as pa
-
-    _empty = pa.table(
-        {
-            "ida": pa.array([], pa.int64()),
-            "idb": pa.array([], pa.int64()),
-            "cell": pa.array([], pa.int32()),
-        }
-    )
 
     def cell_pairs(tbl: "pa.Table") -> "pa.Table":
-        ids = tbl.column("vec_id").to_numpy()
-        n = len(ids)
-        if n < 2:
-            return _empty
-        emb = tbl.column("embedding").combine_chunks()
-        lens = np.diff(emb.offsets.to_numpy())
-        if not (lens == lens[0]).all():  # ragged input must fail loudly
-            raise ValueError(f"ragged embedding lengths in cell: {set(lens)}")
-        mat = (
-            emb.flatten()
-            .to_numpy(zero_copy_only=False)
-            .astype(np.float64, copy=False)
-            .reshape(n, -1)
-        )
-        order = np.argsort(ids)
-        ids = ids[order]
-        mat = mat[order]
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        # Blocked pair scan (r12): unlike the LSH buckets (bounded at
-        # _BUCKET_CAP=512), a CELL is n/k of the corpus — at the 10×
-        # fixture that is 20k vectors per cell, where the old
-        # whole-matrix form allocated a 3.2 GB cosine matrix plus a
-        # 200M-entry triu index per cell (measured: the full key took
-        # 138 s warm at sf10). Tiling the upper triangle in 2048-row
-        # blocks computes the SAME ≥τ pairs (ids ascending ⇒ block
-        # order preserves ida < idb) with O(B²) transient memory;
-        # measured 138 → 9.9 s warm min at sf10, identical output
-        # (exceptAll = 0), no measurable change at sf0.1 where every
-        # cell fits one block. The equivalence is margin-based, not
-        # bit-guaranteed: block shapes change BLAS summation order, so
-        # a cosine within ~1e-15 of τ could flip on another BLAS build.
-        # It holds because the measured margins sit far above that
-        # noise (≥2.8e-7 observed, see the docstring); exceptAll = 0 at
-        # sf0.1 and sf10 on one BLAS build.
-        B = 2048
-        cell0 = tbl.column("cell")[0].as_py()
-        out_a: list[np.ndarray] = []
-        out_b: list[np.ndarray] = []
-        for i0 in range(0, n, B):
-            bi = mat[i0 : i0 + B]
-            c = bi @ bi.T
-            iu = np.triu_indices(len(bi), k=1)
-            keep = c[iu] >= tau
-            out_a.append(ids[i0 + iu[0][keep]])
-            out_b.append(ids[i0 + iu[1][keep]])
-            for j0 in range(i0 + B, n, B):
-                bj = mat[j0 : j0 + B]
-                ii, jj = np.nonzero(bi @ bj.T >= tau)
-                out_a.append(ids[i0 + ii])
-                out_b.append(ids[j0 + jj])
-        ida = np.concatenate(out_a) if out_a else np.empty(0, dtype=np.int64)
-        idb = np.concatenate(out_b) if out_b else np.empty(0, dtype=np.int64)
+        ida, idb, _ = _tau_pair_kernel(tbl)
+        cell = np.full(len(ida), tbl.column("cell")[0].as_py(), dtype="int32")
         return pa.table(
             {
                 "ida": pa.array(ida, pa.int64()),
                 "idb": pa.array(idb, pa.int64()),
-                "cell": pa.array(
-                    np.full(len(ida), cell0, dtype="int32"), pa.int32()
-                ),
+                "cell": pa.array(cell, pa.int32()),
             }
         )
 
@@ -1943,25 +1852,8 @@ def llm_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH nz AS (SELECT vec_id, embedding FROM embeddings
                 WHERE list_dot_product(CAST(embedding AS DOUBLE[]),
                                        CAST(embedding AS DOUBLE[])) > 0),
-    b AS (
-      SELECT vec_id, embedding,
-             {_BAND_SQL_COLS}
-      FROM embeddings
-    ), m AS (
-      {_BAND_SQL_MELT}
-    ), msz AS (
-      SELECT band, bv FROM m GROUP BY band, bv HAVING count(*) <= 512
-    ), mc AS (
-      SELECT m.* FROM m JOIN msz USING (band, bv)
-    ), cand AS (
-      SELECT DISTINCT a.vec_id AS id_a, x.vec_id AS id_b
-      FROM mc a JOIN mc x ON a.band = x.band AND a.bv = x.bv AND a.vec_id < x.vec_id
-    ), found AS (
-      SELECT c.id_a, c.id_b
-      FROM cand c
-      JOIN embeddings ea ON ea.vec_id = c.id_a
-      JOIN embeddings eb ON eb.vec_id = c.id_b
-      WHERE {_sql_cos('ea.embedding', 'eb.embedding')} >= {_NEAR_DUP_TAU}
+    {_DUP_PAIR_SQL_CTE}, found AS (
+      SELECT id_a, id_b FROM pairs WHERE cos >= {_NEAR_DUP_TAU}
     ), truth AS (
       SELECT a.vec_id AS id_a, x.vec_id AS id_b
       FROM nz a JOIN nz x ON a.vec_id < x.vec_id
@@ -1997,7 +1889,7 @@ def llm_banding_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both engines intersect their own verified pair SETS, which the
     llm_near_dedup_embedding gate already proves identical)."""
     e = load_tables(spark, sf_dir)["embeddings"]
-    nz = e.where(_dot(_dbl("embedding"), _dbl("embedding")) > 0)
+    nz = e.where(_norm2("embedding") > 0)
     found = _banded_tau_pairs(e).select("id_a", "id_b").distinct()
     melt = _banded_melt(e)
     msz = melt.groupBy("band", "bv").count().where(F.col("count") <= _BUCKET_CAP)
@@ -2014,9 +1906,9 @@ def llm_banding_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     a = nz.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"),
-                  F.sqrt(_dot(_dbl("embedding"), _dbl("embedding"))).alias("na"))
+                  F.sqrt(_norm2("embedding")).alias("na"))
     x = nz.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"),
-                  F.sqrt(_dot(_dbl("embedding"), _dbl("embedding"))).alias("nb"))
+                  F.sqrt(_norm2("embedding")).alias("nb"))
     truth = (
         a.join(x, F.col("id_a") < F.col("id_b"))
         .where(

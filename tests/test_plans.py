@@ -632,6 +632,19 @@ def test_collect_sites_are_bounded():
         )
 
 
+def test_cosine_helpers_and_pair_kernel_have_one_home():
+    """One implementation per concept: the cosine Column helpers live in
+    engine/llm_ext.py and the blocked τ-pair scan in
+    similarity._tau_pair_kernel. A second copy of either fails here."""
+    import glob
+    import os
+
+    eng = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "engine")
+    src = "".join(open(p).read() for p in sorted(glob.glob(os.path.join(eng, "*.py"))))
+    for needle in ("def _dot(", "def _dbl(", "np.triu_indices", "lambda x, y: x * y"):
+        assert src.count(needle) == 1, f"{needle!r} appears {src.count(needle)} times in engine/"
+
+
 def test_plan_cache_is_prepared_statement_not_result_cache(spark):
     """The r06 plan cache (registry.query(plan_cache=True)) must reuse ONLY
     the Python-built expression tree. Each call must produce a distinct

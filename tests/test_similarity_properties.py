@@ -11,12 +11,19 @@ Two invariants that the differential oracle can't express:
    llm_near_dedup_embedding corresponds to a real pair with exact
    cosine ≥ τ and keep_id < drop_id — blocking may lose recall (by
    design) but must never fabricate a duplicate.
+
+The τ-pair kernel tests need numpy and pyarrow only: they drive the
+blocked cross-block scan and the guards that fixture-sized groups
+(≤218 rows per cell) never reach.
 """
 
 from __future__ import annotations
 
 import string
 
+import numpy as np
+import pyarrow as pa
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -24,7 +31,7 @@ from pyspark.sql import functions as F
 
 from engine.llm_ops import winnow_fingerprints
 from engine.registry import QUERIES
-from engine.similarity import _NEAR_DUP_TAU
+from engine.similarity import _BUCKET_CAP, _NEAR_DUP_TAU, _PAIR_BLOCK, _tau_pair_kernel
 
 _ALPHA = string.ascii_lowercase + " "
 _text = st.text(alphabet=_ALPHA, min_size=0, max_size=60)
@@ -126,3 +133,100 @@ def test_dedup_clusters_distributed_rounds_match_driver_finish(spark, sf_dir, mo
     assert forced == base
     # the loop must restore the session's shuffle partitioning
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def _group(mat: np.ndarray, ids: np.ndarray) -> pa.Table:
+    """One verifier group as it arrives from applyInArrow."""
+    return pa.table(
+        {
+            "vec_id": pa.array(ids, pa.int64()),
+            "embedding": pa.array(list(mat.astype(np.float32)), pa.list_(pa.float32())),
+        }
+    )
+
+
+@pytest.mark.parametrize("n", [_PAIR_BLOCK + 1, 4500])
+def test_tau_pair_kernel_blocked_scan_matches_whole_matrix(n):
+    """Groups larger than one block: the blocked scan emits exactly the
+    ≥ τ pairs of a whole-matrix triu scan, each once with ids_a < ids_b,
+    and the same cosines up to summation-order noise."""
+    rng = np.random.default_rng(n)
+    mat = rng.standard_normal((n, 16))
+    ids = rng.permutation(np.arange(n) * 3 + 7)  # unsorted, with gaps
+    ida, idb, cos = _tau_pair_kernel(_group(mat, ids))
+
+    order = np.argsort(ids)
+    ref = mat.astype(np.float32).astype(np.float64)[order]
+    ref /= np.linalg.norm(ref, axis=1, keepdims=True)
+    iu = np.triu_indices(n, k=1)
+    c = (ref @ ref.T)[iu]
+    keep = c >= _NEAR_DUP_TAU
+    want = dict(zip(zip(ids[order][iu[0][keep]], ids[order][iu[1][keep]]), c[keep]))
+
+    got = dict(zip(zip(ida, idb), cos))
+    assert len(got) == len(ida), "a pair was emitted twice"
+    assert (ida < idb).all()
+    rank = np.sort(ids)
+    blk_a = np.searchsorted(rank, ida) // _PAIR_BLOCK
+    blk_b = np.searchsorted(rank, idb) // _PAIR_BLOCK
+    assert (blk_a < blk_b).any(), "no cross-block pair exercised"
+    assert got.keys() == want.keys()
+    assert np.allclose([got[k] for k in want], list(want.values()), rtol=0, atol=1e-12)
+
+
+def test_tau_pair_kernel_rejects_ragged_group():
+    tbl = pa.table(
+        {
+            "vec_id": pa.array([1, 2, 3], pa.int64()),
+            "embedding": pa.array([[1.0, 0.0], [1.0, 0.1], [1.0]], pa.list_(pa.float32())),
+        }
+    )
+    with pytest.raises(ValueError, match="ragged"):
+        _tau_pair_kernel(tbl)
+
+
+def test_tau_pair_kernel_cap_and_tiny_groups():
+    """Identical vectors pair up at cos 1 — unless the group exceeds the
+    cap (then it is dropped whole) or has fewer than 2 rows."""
+    n = _BUCKET_CAP + 1
+    same = np.ones((n, 4))
+    ids = np.arange(n)
+    for out in (
+        _tau_pair_kernel(_group(same, ids), _BUCKET_CAP),
+        _tau_pair_kernel(_group(same[:1], ids[:1])),
+    ):
+        assert all(len(a) == 0 for a in out)
+    ida, _, cos = _tau_pair_kernel(_group(same[:-1], ids[:-1]), _BUCKET_CAP)
+    assert len(ida) == _BUCKET_CAP * (_BUCKET_CAP - 1) // 2
+    assert np.allclose(cos, 1.0)
+
+
+def test_tau_pair_kernel_ships_without_the_package(tmp_path):
+    """The applyInArrow verifiers call the module-level kernel, and a
+    Python worker need not be able to import ``engine`` (the driver
+    contract runs from any directory): the pickled kernel must load and
+    run in a process that cannot import the package."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    blob = tmp_path / "kernel.pkl"
+    blob.write_bytes(cloudpickle.dumps(_tau_pair_kernel))
+    code = (
+        "import importlib.util, pickle, sys\n"
+        "import pyarrow as pa\n"
+        "assert importlib.util.find_spec('engine') is None\n"
+        "kernel = pickle.load(open(sys.argv[1], 'rb'))\n"
+        "emb = pa.array([[1.0, 0.0], [1.0, 0.1], [0.0, 1.0]], pa.list_(pa.float32()))\n"
+        "ida, idb, _ = kernel(pa.table({'vec_id': [5, 3, 9], 'embedding': emb}))\n"
+        "print(ida.tolist(), idb.tolist())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(blob)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == ["[3]", "[5]"]
