@@ -35,29 +35,39 @@ Per-source lifecycle (exactly the reference's linear batch pipeline):
 
 1. read the extract for <run-date> with the configured explicit schema;
 2. optional dedup_extract (latest row per key wins, deterministic tiebreak);
-3. first run (no snapshot strictly before this run-date): every row
+3. write the new current-state snapshot into a hidden staging dir: for a
+   first run or a full extract it IS the (deduplicated) extract, for a
+   delta extract it is the previous snapshot upserted with the delta;
+4. first run (no snapshot strictly before this run-date): every row
    op='I'; else diff against the newest snapshot STRICTLY BEFORE the
    run-date — never the run-date's own snapshot, so re-running a day is
    idempotent (it recomputes the original diff) instead of diffing the
    extract against itself (ADVICE r09) — via snapshot_diff (full
-   extracts — full-outer join, I/U/D/N classification) or
-   incremental_upsert (delta extracts — I/U only, deletes undetectable
-   by definition);
-4. write the new current-state snapshot into a hidden staging dir and
-   publish it under ``<output_root>/<name>/snapshot/run_date=<run-date>/``
-   by rename (never an in-place rewrite — a re-run of the day _LATEST
-   names must not expose a half-written dir to pointer-resolving
-   readers), then repoint ``<output_root>/<name>/_LATEST`` forward-only
-   (a one-line pointer file — the pointer flips only after the full
-   write succeeds, the same publish-then-point pattern as
-   engine/txlog.py);
-5. append the non-N changelog rows (op, key_hash, values, run_date)
-   under ``<output_root>/<name>/changelog/run_date=<run-date>/``.
+   extracts — full-outer join, I/U/D/N classification, reading the
+   staged snapshot as the current side) or a diff restricted to the
+   delta's keys (delta extracts — I/U only, deletes undetectable by
+   definition); the non-N changelog rows (op, key_hash, values,
+   run_date) land under
+   ``<output_root>/<name>/changelog/run_date=<run-date>/``;
+5. publish the staged snapshot under
+   ``<output_root>/<name>/snapshot/run_date=<run-date>/`` by rename
+   (never an in-place rewrite — a re-run of the day _LATEST names must
+   not expose a half-written dir to pointer-resolving readers), then
+   repoint ``<output_root>/<name>/_LATEST`` forward-only (a one-line
+   pointer file — the pointer flips only after both writes succeed, the
+   same publish-then-point pattern as engine/txlog.py). A failure
+   anywhere from the staging write to the rename removes the staging
+   dir and leaves _LATEST where it was.
 
-Every step is a lazy DataFrame plan; execution happens at the two
-writes, where Catalyst plans the shuffle join — on a 100 TB extract the
-full-outer diff is one key-partitioned shuffle per side and the
-changelog write is a filter over the same plan (no second diff).
+Every step is a lazy DataFrame plan; execution happens at two writes
+and one collect. The staging write materializes the deduplicated
+extract once; the changelog write reads those staged bytes back (with
+their known schema, so no inference job) against the previous snapshot
+(read with the day's schema too) — on a 100 TB extract the full-outer
+diff is one key-partitioned shuffle per side, and the changelog
+describes exactly the bytes that get published, which are also the
+bytes tomorrow's diff reads. The per-op counts are one groupBy collect
+over the written changelog. A diff day runs 8 Spark jobs.
 
 Exit code 0 and one JSON summary line per source on stdout:
 ``{"source": ..., "run_date": ..., "first_run": ..., "counts": {...}}``
@@ -88,6 +98,12 @@ from engine.io import get_spark
 
 
 def _read_extract(spark: SparkSession, src: dict, run_date: str) -> DataFrame:
+    """The day's extract. Its schema is the day's schema contract:
+    Parquet takes it from the file footer (the one inference job a day
+    pays), csv/json from the configured ``schema``. run_source reads the
+    previous snapshot and the staged snapshot with this schema, so a
+    tracked column whose type drifts in a way that is not a widening
+    fails the day instead of being coerced in the diff."""
     path = src["input_path"].format(run_date=run_date)
     fmt = src.get("format", "parquet")
     if fmt == "parquet":
@@ -217,35 +233,16 @@ def run_source(spark: SparkSession, root: str, src: dict, run_date: str) -> dict
 
     prev_path = _resolve_prev(root, spec.name, run_date)
     first_run = prev_path is None
-    if first_run:
-        # first ever run: no previous snapshot → all rows are inserts
-        changes = with_fingerprints(curr, spec).select(
-            F.lit("I").alias("op"), "key_hash", *spec.key_cols, *spec.tracked_cols
-        )
-        new_snapshot = curr
-    else:
-        prev = spark.read.parquet(prev_path).select(*spec.key_cols, *spec.tracked_cols)
-        if spec.extract_type == "full":
-            diff = snapshot_diff(prev, curr, spec)
-            changes = diff.where(F.col("op") != "N")
-            new_snapshot = curr
-        else:
-            # delta feed: deletes undetectable; snapshot = upsert, and the
-            # changelog classifies each delta row I/U by key presence.
-            # ONE diff plan serves both (the delta rows are `curr` here),
-            # restricted to keys present in the delta so untouched rows
-            # never produce phantom D/N entries.
-            new_snapshot = incremental_upsert(prev, curr, spec)
-            prev_touched = prev.join(
-                curr.select(*spec.key_cols).distinct(), list(spec.key_cols), "left_semi"
-            )
-            diff = snapshot_diff(prev_touched, curr, spec)
-            changes = diff.where(F.col("op").isin("I", "U"))
+    # The previous snapshot was written by this CLI, so its schema is the
+    # day's schema: read it with curr's schema instead of paying an
+    # inference job. A value-preserving widening (int32 file read as
+    # BIGINT) still reads; a type drift that is not a widening (a DOUBLE
+    # column arriving as STRING) raises here instead of being coerced
+    # silently in the diff's join condition.
+    prev = None if first_run else spark.read.schema(curr.schema).parquet(prev_path)
 
     snap_dir = os.path.join(root, spec.name, "snapshot", f"run_date={run_date}")
     log_dir = os.path.join(root, spec.name, "changelog", f"run_date={run_date}")
-    changes = changes.withColumn("run_date", F.lit(run_date))
-    changes.write.mode("overwrite").parquet(log_dir)  # idempotent re-run
     # Snapshot lands in a staging dir and is published by TWO renames,
     # never an in-place rewrite: on a RE-run of the day _LATEST already
     # names, an in-place overwrite would expose a half-written dir to
@@ -256,12 +253,43 @@ def run_source(spark: SparkSession, root: str, src: dict, run_date: str) -> dict
     # never mistake one for a complete snapshot.
     snap_parent = os.path.dirname(snap_dir)
     staging = os.path.join(snap_parent, f".staging_{run_date}_{uuid.uuid4().hex[:8]}")
-    new_snapshot.write.mode("overwrite").parquet(staging)
-    displaced = None
-    if os.path.exists(snap_dir):
-        displaced = os.path.join(snap_parent, f".old_{run_date}_{uuid.uuid4().hex[:8]}")
-        os.rename(snap_dir, displaced)
-    os.rename(staging, snap_dir)
+    try:
+        if first_run or spec.extract_type == "full":
+            # the new snapshot IS the deduplicated extract: materialize it
+            # once, as the staged snapshot, and compute the changelog from
+            # those staged bytes — no second read and dedup shuffle of the
+            # extract, and the changelog describes exactly what is published
+            curr.write.mode("overwrite").parquet(staging)
+            curr = spark.read.schema(curr.schema).parquet(staging)
+            if first_run:
+                # first ever run: no previous snapshot → all rows are inserts
+                changes = with_fingerprints(curr, spec).select(
+                    F.lit("I").alias("op"), "key_hash", *spec.key_cols, *spec.tracked_cols
+                )
+            else:
+                changes = snapshot_diff(prev, curr, spec).where(F.col("op") != "N")
+        else:
+            # delta feed: deletes undetectable; snapshot = upsert, and the
+            # changelog classifies each delta row I/U by key presence,
+            # diffing only the prev rows whose keys the delta touches so
+            # untouched rows never produce phantom D/N entries.
+            incremental_upsert(prev, curr, spec).write.mode("overwrite").parquet(staging)
+            prev_touched = prev.join(
+                curr.select(*spec.key_cols).distinct(), list(spec.key_cols), "left_semi"
+            )
+            changes = snapshot_diff(prev_touched, curr, spec).where(F.col("op").isin("I", "U"))
+        changes = changes.withColumn("run_date", F.lit(run_date))
+        changes.write.mode("overwrite").parquet(log_dir)  # idempotent re-run
+        displaced = None
+        if os.path.exists(snap_dir):
+            displaced = os.path.join(snap_parent, f".old_{run_date}_{uuid.uuid4().hex[:8]}")
+            os.rename(snap_dir, displaced)
+        os.rename(staging, snap_dir)
+    except BaseException:
+        # the day's own staging copy is reclaimed now, not by the next
+        # run's age-guarded sweep; _LATEST has not moved
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     if displaced is not None:
         shutil.rmtree(displaced, ignore_errors=True)
     # publish-then-point: the pointer flips only after both writes landed,
@@ -278,7 +306,8 @@ def run_source(spark: SparkSession, root: str, src: dict, run_date: str) -> dict
 
     counts = {
         r["op"]: r["n"]
-        for r in spark.read.parquet(log_dir)
+        for r in spark.read.schema(changes.schema)
+        .parquet(log_dir)
         .groupBy("op")
         .agg(F.count("*").alias("n"))
         .collect()

@@ -12,10 +12,14 @@ import os
 import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from engine.cdc import SourceSpec, apply_changes
 from engine.io import load_tables
+from perfbench import gen
 from tests.oracle import DEFAULT_SF_DIR
 
 
@@ -322,3 +326,125 @@ def test_cli_main_runs_from_config_file(spark, tmp_path, cli, monkeypatch):
     lines = [json.loads(line) for line in buf.getvalue().strip().splitlines()]
     assert [s["source"] for s in lines] == ["orders", "customer"]
     assert all(s["first_run"] for s in lines)
+
+
+# ---------------------------------------------------------------------------
+# the dedup path, on a seeded chain with stale duplicate rows per key
+
+_CHAIN_DAYS = 4
+#: Spark jobs one diff day may run: extract schema inference, the dedup
+#: exchange and the staged snapshot write, the two diff exchanges and the
+#: changelog write, the counts exchange and collect.
+_MAX_JOBS_PER_DIFF_DAY = 8
+
+
+def _jobs_in_group(spark, group: str) -> int:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is fed async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def chain(spark, tmp_path_factory, cli):
+    """Run every day of a seeded orders chain whose extracts repeat 2% of
+    their keys with a stale older version; each day runs in its own job
+    group. Returns the source, the generator truth, the per-day summaries
+    and the per-day job counts."""
+    base = tmp_path_factory.mktemp("chain")
+    src, truth = gen.cdc_days(str(base / "extracts"), 7, _CHAIN_DAYS, 2000)
+    out = str(base / "out")
+    sc = spark.sparkContext
+    summaries, jobs = [], []
+    try:
+        for day in range(_CHAIN_DAYS):
+            group = f"test_run_cdc_chain_{day}"
+            sc.setJobGroup(group, group)
+            summaries.append(cli.run_source(spark, out, src, gen.run_date(day)))
+            jobs.append(_jobs_in_group(spark, group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return src, truth, summaries, jobs
+
+
+def test_dedup_chain_counts_and_replay(spark, chain):
+    """Every day's counts equal the generator truth, and replaying the
+    day's changelog onto the previous snapshot gives the published one."""
+    src, truth, summaries, _ = chain
+    spec = SourceSpec(src["name"], tuple(src["key_cols"]), tuple(src["tracked_cols"]))
+    cols = [*spec.key_cols, *spec.tracked_cols]
+    prev = None
+    for day, s in enumerate(summaries):
+        assert s["first_run"] == (day == 0)
+        assert s["counts"] == truth[day], f"day {day}"
+        snap = spark.read.parquet(s["snapshot"]).select(*cols)
+        assert snap.count() == snap.select(*spec.key_cols).distinct().count()
+        log = spark.read.parquet(s["changelog"])
+        if prev is None:
+            prev = snap.limit(0)
+        replayed = apply_changes(prev, log, spec)
+        assert replayed.exceptAll(snap).count() == 0, f"day {day}"
+        assert snap.exceptAll(replayed).count() == 0, f"day {day}"
+        prev = snap
+
+
+def test_diff_day_job_count(chain):
+    """The scheduling floor of a diff day: the deduplicated extract is
+    materialized once (as the staged snapshot) and no file whose schema
+    is known is inferred."""
+    jobs = chain[3]
+    assert max(jobs[1:]) <= _MAX_JOBS_PER_DIFF_DAY, jobs
+
+
+def test_failed_day_cleans_staging_and_recovers(spark, tmp_path, cli):
+    """A day-2 extract whose tracked DOUBLE column arrives as STRING must
+    fail (reading the previous snapshot with the day's schema raises, it
+    is not coerced in the join), leave no staging dir, keep _LATEST on
+    day 1, and a re-run with the fixed extract must give the true counts."""
+    src, truth = gen.cdc_days(str(tmp_path / "extracts"), 3, 2, 500)
+    out = str(tmp_path / "out")
+    d1, d2 = gen.run_date(0), gen.run_date(1)
+    assert cli.run_source(spark, out, src, d1)["counts"] == truth[0]
+
+    part = os.path.join(src["input_path"].format(run_date=d2), "part-0.parquet")
+    good = pq.read_table(part)
+    i = good.schema.get_field_index("o_totalprice")
+    pq.write_table(good.set_column(i, "o_totalprice", good["o_totalprice"].cast(pa.string())), part)
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        cli.run_source(spark, out, src, d2)
+    snap_root = os.path.join(out, "orders", "snapshot")
+    assert sorted(os.listdir(snap_root)) == [f"run_date={d1}"]
+    assert open(os.path.join(out, "orders", "_LATEST")).read().endswith(f"run_date={d1}")
+
+    pq.write_table(good, part)
+    assert cli.run_source(spark, out, src, d2)["counts"] == truth[1]
+    assert open(os.path.join(out, "orders", "_LATEST")).read().endswith(f"run_date={d2}")
+
+
+def test_read_extract_formats(spark, tmp_path, cli):
+    """A CSV extract read with the configured schema gives the same counts
+    as the Parquet one; JSON without a schema and an unknown format raise."""
+    src, truth = gen.cdc_days(str(tmp_path / "extracts"), 5, 2, 500)
+    csv_base = str(tmp_path / "csv")
+    for day in range(2):
+        d = gen.run_date(day)
+        spark.read.parquet(src["input_path"].format(run_date=d)).write.option(
+            "header", "true"
+        ).csv(os.path.join(csv_base, d))
+    csv_src = dict(
+        src,
+        input_path=csv_base + "/{run_date}",
+        format="csv",
+        schema="o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_version BIGINT",
+    )
+    for day in range(2):
+        d = gen.run_date(day)
+        pq_counts = cli.run_source(spark, str(tmp_path / "pq_out"), src, d)["counts"]
+        csv_counts = cli.run_source(spark, str(tmp_path / "csv_out"), csv_src, d)["counts"]
+        assert csv_counts == pq_counts == truth[day]
+
+    with pytest.raises(ValueError, match="require 'schema'"):
+        cli._read_extract(spark, dict(src, format="json"), gen.run_date(0))
+    with pytest.raises(ValueError, match="unknown format"):
+        cli._read_extract(spark, dict(src, format="orc"), gen.run_date(0))
