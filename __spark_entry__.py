@@ -48,6 +48,13 @@ _PROMOTED_R13 = [
     "llm_cosine_topk",           # _label_centroids + llm_ext helpers
     "llm_embed_norm",            # _norm2 moved to llm_ext
     "fn_array_hof",              # norm² via llm_ext._norm2
+    # foreachBatch sinks moved onto one TxTable commit path (one version
+    # per micro-batch, batch-id token, atomic manifest publish):
+    "sink_foreachBatch_merge",   # join-shaped merge → TxTable.overwrite
+    "stream_cdc_pipeline",       # union+dedup merge → TxTable.overwrite
+    "stream_scd2_foreachbatch",  # SCD2 re-window → TxTable.overwrite
+    "stream_txlog_sink",         # shared token check + _drain
+    "stream_join_ivm",           # partial set as TxTable versions
 ]
 
 def _coverage_rank() -> tuple[dict[str, int], dict[str, int]]:

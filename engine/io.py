@@ -389,12 +389,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    """SQL entry point: register fixture views, run one statement."""
-    load_tables(spark, sf_dir)
-    return spark.sql(sql)
-
-
 # ---------------------------------------------------------------------------
 # §2.2 scan/sink operator keys
 # ---------------------------------------------------------------------------

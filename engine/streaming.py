@@ -10,11 +10,14 @@ Mechanics shared by all keys:
 - Input: the normalized ``events`` table written once per (session,
   sf_dir) to a temp dir as FOUR time-ordered parquet files; with
   ``maxFilesPerTrigger=1`` this yields four genuine micro-batches.
-- State: aggregations use complete/update mode into a memory sink; the
-  CDC pipeline maintains a versioned parquet snapshot under
-  ``foreachBatch`` with an ORDER-INDEPENDENT idempotent merge (max-ts
-  wins), so at-least-once batch delivery and file reordering cannot
-  corrupt the snapshot — the exactly-once posture from SURVEY §4.
+- State: aggregations use complete/update mode into a memory sink. Every
+  foreachBatch sink commits through ONE path (``_tx_sink``): each
+  micro-batch lands as exactly one TxTable version (engine/txlog.py)
+  whose op carries the batch-id token. A version is visible only once
+  its manifest commits, so a crash mid-write leaves unreferenced files,
+  never a torn snapshot; Spark replays the uncommitted batch on restart,
+  and a replayed batch whose token is already committed is a no-op —
+  at-least-once delivery becomes exactly-once state (SURVEY §4).
 - At scale: the same code reads a real feed (Kafka/files) with watermarks
   bounding state; state stores shard by group key across executors.
 """
@@ -36,6 +39,7 @@ from engine.io import tmpdir as io_tmpdir
 from engine.registry import query
 
 _uid = itertools.count()
+_CDC_COLS = ["user_id", "event_id", "ts", "value"]
 # weakly keyed by the session (r09, VERDICT r08 item 8): an id()-keyed
 # dict is never evicted, so a new session allocated at a dead session's
 # address would inherit its entries — same hazard class the r08 ADVICE
@@ -83,20 +87,59 @@ def _read_stream(spark: SparkSession, sf_dir: str, max_files: int | None = None)
     return r.option("recursiveFileLookup", "true").parquet(d)
 
 
+def _drain(writer, ckpt: str | None = None) -> None:
+    """Run a configured DataStreamWriter as an availableNow query to
+    completion, checkpointing in ``ckpt`` (a restartable location) or in
+    a temp dir removed afterwards."""
+    with tempfile.TemporaryDirectory(prefix="engine_ckpt_") as tmp:
+        q = writer.option("checkpointLocation", ckpt or tmp).trigger(availableNow=True).start()
+        q.awaitTermination()
+
+
 def _run_to_memory(stream_df: DataFrame, mode: str) -> DataFrame:
     """Run an availableNow stream into a memory sink; return final table."""
     name = f"memsink_{next(_uid)}"
-    with tempfile.TemporaryDirectory(prefix="engine_ckpt_") as ckpt:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(stream_df.writeStream.format("memory").queryName(name).outputMode(mode))
     return stream_df.sparkSession.table(name)
+
+
+def _once(t, commit):
+    """foreachBatch body: ``commit(t, batch_df, token)`` with token
+    ``batch={id}``, skipped when a committed op already carries the
+    token — a replayed batch is a no-op before it touches data."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        token = f"batch={batch_id}"
+        if not any(op.endswith(f"#{token}") for op in t.ops()):
+            commit(t, batch_df, token)
+
+    return run
+
+
+def _tx_sink(stream: DataFrame, commit, table: str | None = None, ckpt: str | None = None):
+    """Drain ``stream`` into a TxTable, one committed version per
+    micro-batch via ``_once(t, commit)``; returns the table. ``table``
+    and ``ckpt`` default to fresh temp dirs; passing both lets a caller
+    restart a query against the same state."""
+    from engine.txlog import TxTable
+
+    t = TxTable(stream.sparkSession, table or os.path.join(io_tmpdir("engine_txsink_"), "tbl"))
+    _drain(stream.writeStream.foreachBatch(_once(t, commit)), ckpt)
+    return t
+
+
+def _overwrite(merge):
+    """The commit of a snapshot sink: ``merge(prev or None, batch_df)``
+    becomes the version after the one it read, committed with
+    ``overwrite`` in the plan's own partitioning; a writer that
+    committed since the read makes it raise CommitConflict."""
+
+    def commit(t, batch_df: DataFrame, token: str) -> None:
+        vs = t.versions()
+        prev = t.read(vs[-1]) if vs else None
+        t.overwrite(merge(prev, batch_df), note=token, expected_version=vs[-1] + 1 if vs else 0)
+
+    return commit
 
 
 @query(
@@ -480,6 +523,27 @@ def stream_custom_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _merge_join(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """sink_foreachBatch_merge's merge: full-outer join prev⋈batch on
+    user_id, the newer (ts, event_id) side wins the whole row."""
+    latest = dedup_extract(batch_df.select(*_CDC_COLS), ["user_id"], "ts", "event_id")
+    if prev is None:
+        return latest
+    p = prev.select(*[F.col(c).alias(f"p_{c}") for c in _CDC_COLS])
+    b = latest.select(*[F.col(c).alias(f"b_{c}") for c in _CDC_COLS])
+    j = p.join(b, F.col("p_user_id") == F.col("b_user_id"), "full_outer")
+    b_wins = F.col("p_user_id").isNull() | (
+        F.col("b_user_id").isNotNull()
+        & (
+            (F.col("b_ts") > F.col("p_ts"))
+            | ((F.col("b_ts") == F.col("p_ts")) & (F.col("b_event_id") >= F.col("p_event_id")))
+        )
+    )
+    return j.select(
+        *[F.when(b_wins, F.col(f"b_{c}")).otherwise(F.col(f"p_{c}")).alias(c) for c in _CDC_COLS]
+    )
+
+
 @query(
     "sink_foreachBatch_merge",
     oracle="""
@@ -497,50 +561,12 @@ def sink_foreachBatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     MATCHED semantics (no Delta Lake): full-outer join prev⋈batch on the
     key, newest (ts, event_id) wins per column set. Unlike
     stream_cdc_pipeline's union+dedup formulation, this is the explicit
-    join-shaped merge; both are order-independent and idempotent, and both
-    must equal the batch latest-per-key oracle."""
-    snap_dir = io_tmpdir("engine_merge_snap_")
-    cols = ["user_id", "event_id", "ts", "value"]
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        batch_latest = dedup_extract(batch_df.select(*cols), ["user_id"], "ts", "event_id")
-        versions = sorted(
-            (d for d in os.listdir(snap_dir) if d.startswith("v")), key=lambda d: int(d[1:])
-        )
-        if not versions:
-            out = batch_latest
-        else:
-            prev = sp.read.parquet(os.path.join(snap_dir, versions[-1]))
-            p = prev.select(*[F.col(c).alias(f"p_{c}") for c in cols])
-            b = batch_latest.select(*[F.col(c).alias(f"b_{c}") for c in cols])
-            j = p.join(b, F.col("p_user_id") == F.col("b_user_id"), "full_outer")
-            b_wins = F.col("p_user_id").isNull() | (
-                F.col("b_user_id").isNotNull()
-                & (
-                    (F.col("b_ts") > F.col("p_ts"))
-                    | ((F.col("b_ts") == F.col("p_ts")) & (F.col("b_event_id") >= F.col("p_event_id")))
-                )
-            )
-            out = j.select(
-                *[F.when(b_wins, F.col(f"b_{c}")).otherwise(F.col(f"p_{c}")).alias(c) for c in cols]
-            )
-        out.write.mode("overwrite").parquet(os.path.join(snap_dir, f"v{batch_id}"))
-
-    s = _read_stream(spark, sf_dir, max_files=1)
-    with tempfile.TemporaryDirectory(prefix="engine_ckpt_") as ckpt:
-        q = (
-            s.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    versions = sorted(
-        (d for d in os.listdir(snap_dir) if d.startswith("v")), key=lambda d: int(d[1:])
-    )
-    final = spark.read.parquet(os.path.join(snap_dir, versions[-1]))
-    return final.select("user_id", "event_id", "value").localCheckpoint(eager=True)
+    join-shaped merge; both are order-independent, and both must equal
+    the batch latest-per-key oracle. Each batch's snapshot is one TxTable
+    OVERWRITE version, visible only once its manifest commits; a replayed
+    batch is a no-op by its token (``_tx_sink``)."""
+    t = _tx_sink(_read_stream(spark, sf_dir, max_files=1), _overwrite(_merge_join))
+    return t.read().select("user_id", "event_id", "value").localCheckpoint(eager=True)
 
 
 @query(
@@ -558,13 +584,23 @@ def stream_cdc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NORTH-STAR FLAGSHIP: events as a CDC feed → foreachBatch →
     idempotent merge → current-state snapshot.
 
-    Each micro-batch merges into a versioned parquet snapshot with
-    latest-per-key (max ts, event_id tie-break) semantics. The merge is
-    ORDER-INDEPENDENT and IDEMPOTENT: replayed or reordered batches yield
-    the same snapshot — at-least-once delivery becomes exactly-once state
+    Each micro-batch merges into the snapshot with latest-per-key (max
+    ts, event_id tie-break) semantics — ORDER-INDEPENDENT, so reordered
+    batches converge to the same snapshot — and commits it as one
+    TxTable OVERWRITE version, visible only once its manifest commits.
+    A replayed batch is a no-op by its batch-id token, so at-least-once
+    delivery becomes exactly-once state, crash mid-batch included
     (SURVEY §4). Final snapshot ≡ batch latest-per-key over all events.
     """
     return _cdc_pipeline(spark, sf_dir, max_files=1)
+
+
+def _merge_latest(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """stream_cdc_pipeline's merge: union + latest-per-key dedup."""
+    inc = batch_df.select(*_CDC_COLS)
+    return dedup_extract(
+        inc if prev is None else prev.unionByName(inc), ["user_id"], "ts", "event_id"
+    )
 
 
 def _cdc_pipeline(spark: SparkSession, sf_dir: str, max_files: int | None = 1) -> DataFrame:
@@ -574,38 +610,36 @@ def _cdc_pipeline(spark: SparkSession, sf_dir: str, max_files: int | None = 1) -
     max_files=1 (4 merges — the per-batch machinery under test);
     bench.py's larger-batch points call this directly to record how
     per-batch merge throughput scales with batch size (VERDICT r07
-    item 4). Snapshot semantics are idempotent/order-independent, so
-    every batch size converges to the same final snapshot."""
-    snap_dir = io_tmpdir("engine_cdc_snap_")
-    cols = ["user_id", "event_id", "ts", "value"]
+    item 4). Snapshot semantics are order-independent, so every batch
+    size converges to the same final snapshot."""
+    t = _tx_sink(_read_stream(spark, sf_dir, max_files=max_files), _overwrite(_merge_latest))
+    return t.read().select(*_CDC_COLS).localCheckpoint(eager=True)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        versions = sorted(
-            (d for d in os.listdir(snap_dir) if d.startswith("v")),
-            key=lambda d: int(d[1:]),
-        )
-        incoming = batch_df.select(*cols)
-        if versions:
-            prev = sp.read.parquet(os.path.join(snap_dir, versions[-1]))
-            incoming = prev.unionByName(incoming)
-        new_snap = dedup_extract(incoming, ["user_id"], "ts", "event_id")
-        new_snap.write.mode("overwrite").parquet(os.path.join(snap_dir, f"v{batch_id}"))
 
-    s = _read_stream(spark, sf_dir, max_files=max_files)
-    with tempfile.TemporaryDirectory(prefix="engine_ckpt_") as ckpt:
-        q = (
-            s.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    versions = sorted(
-        (d for d in os.listdir(snap_dir) if d.startswith("v")), key=lambda d: int(d[1:])
+def _scd2_window(df: DataFrame) -> DataFrame:
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return df.select(
+        "user_id",
+        "event_id",
+        "value",
+        F.col("ts").alias("effective_from"),
+        F.lead("ts").over(w).alias("effective_to"),
+        F.lead("ts").over(w).isNull().alias("is_current"),
     )
-    final = spark.read.parquet(os.path.join(snap_dir, versions[-1]))
-    return final.select(*cols).localCheckpoint(eager=True)
+
+
+def _merge_scd2(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """stream_scd2_foreachbatch's merge: untouched users' history passes
+    through (anti-join); touched users' rows are re-windowed."""
+    inc = batch_df.select("user_id", "event_id", "value", "ts")
+    if prev is None:
+        return _scd2_window(inc)
+    touched = inc.select("user_id").distinct()
+    untouched = prev.join(touched, "user_id", "left_anti")
+    touched_rows = prev.join(touched, "user_id", "left_semi").select(
+        "user_id", "event_id", "value", F.col("effective_from").alias("ts")
+    )
+    return untouched.unionByName(_scd2_window(touched_rows.unionByName(inc)))
 
 
 @query(
@@ -629,58 +663,11 @@ def stream_scd2_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     intervals are a pure function of its accumulated rows, so late or
     reordered batches converge to the same history (the oracle is the
     batch window over ALL events). The streaming twin of
-    cdc_scd2_history; versioned parquet snapshots as in
-    stream_cdc_pipeline."""
-    hist_dir = io_tmpdir("engine_scd2_")
-    cols = ["user_id", "event_id", "value", "ts"]
-
-    def scd2(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        return df.select(
-            "user_id",
-            "event_id",
-            "value",
-            F.col("ts").alias("effective_from"),
-            F.lead("ts").over(w).alias("effective_to"),
-            F.lead("ts").over(w).isNull().alias("is_current"),
-        )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        versions = sorted(
-            (d for d in os.listdir(hist_dir) if d.startswith("v")),
-            key=lambda d: int(d[1:]),
-        )
-        inc = batch_df.select(*cols)
-        if versions:
-            prev = sp.read.parquet(os.path.join(hist_dir, versions[-1]))
-            touched = inc.select("user_id").distinct()
-            untouched = prev.join(touched, "user_id", "left_anti")
-            touched_rows = prev.join(touched, "user_id", "left_semi").select(
-                "user_id",
-                "event_id",
-                "value",
-                F.col("effective_from").alias("ts"),
-            )
-            out = untouched.unionByName(scd2(touched_rows.unionByName(inc)))
-        else:
-            out = scd2(inc)
-        out.write.mode("overwrite").parquet(os.path.join(hist_dir, f"v{batch_id}"))
-
-    s = _read_stream(spark, sf_dir, max_files=1)
-    with tempfile.TemporaryDirectory(prefix="engine_ckpt_") as ckpt:
-        q = (
-            s.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    versions = sorted(
-        (d for d in os.listdir(hist_dir) if d.startswith("v")), key=lambda d: int(d[1:])
-    )
-    final = spark.read.parquet(os.path.join(hist_dir, versions[-1]))
-    return final.select(
+    cdc_scd2_history. Each batch's history is one TxTable OVERWRITE
+    version, visible only once its manifest commits; a replayed batch is
+    a no-op by its token."""
+    t = _tx_sink(_read_stream(spark, sf_dir, max_files=1), _overwrite(_merge_scd2))
+    return t.read().select(
         "user_id", "event_id", "value", "effective_from", "effective_to", "is_current"
     ).localCheckpoint(eager=True)
 
@@ -830,24 +817,23 @@ def stream_timeout_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental maintenance of an AGGREGATED JOIN VIEW
     (revenue by market segment from purchases ⋈ customer): each
-    micro-batch computes its own deterministic partial (batch ⋈ broadcast
-    dim → segment aggregate of exact cents) and INSERT-OVERWRITES it
-    under its batch id; the view is the re-aggregation of batch partials.
+    micro-batch computes its own partial (batch ⋈ broadcast dim →
+    segment aggregate of exact cents) and commits the partial set so far
+    (prev ∪ partial, O(batches × segments) rows) as one TxTable OVERWRITE
+    version; the view is the re-aggregation of the committed partials.
 
-    This is the production exactly-once pattern for additive views:
-    overwrite-by-batch-id makes replayed batches IDEMPOTENT (a retried
-    batch rewrites the same partial, never double-counts), decomposable
-    partials make the refresh cost O(|batch|) probe work against the
-    broadcast dim — the streaming twin of cdc_join_ivm's delta-join
-    identity, with the batch sequence as the delta stream. Final view ≡
-    the batch join+aggregate over all events (the oracle), which is
-    Structured Streaming's equivalence guarantee applied through the
-    foreachBatch escape hatch."""
-    t = load_tables(spark, sf_dir)
-    cust = t["customer"].select("c_custkey", "c_mktsegment")
-    part_dir = io_tmpdir("engine_ivm_parts_")
+    This is the exactly-once pattern for additive views: a version is
+    visible only once its manifest commits, and a replayed batch finds
+    its batch-id token and no-ops instead of double-counting.
+    Decomposable partials make the refresh cost O(|batch|) probe work
+    against the broadcast dim — the streaming twin of cdc_join_ivm's
+    delta-join identity, with the batch sequence as the delta stream.
+    Final view ≡ the batch join+aggregate over all events (the oracle),
+    which is Structured Streaming's equivalence guarantee applied
+    through the foreachBatch escape hatch."""
+    cust = load_tables(spark, sf_dir)["customer"].select("c_custkey", "c_mktsegment")
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def add_partial(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         partial = (
             batch_df.where(F.col("event_type") == "purchase")
             .join(F.broadcast(cust), batch_df["user_id"] == F.col("c_custkey"))
@@ -857,37 +843,20 @@ def stream_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"),
             )
         )
-        partial.write.mode("overwrite").parquet(
-            os.path.join(part_dir, f"b{batch_id}")
-        )
+        # O(batches × segments) rows: one file, no per-partition files
+        return (partial if prev is None else prev.unionByName(partial)).coalesce(1)
 
-    s = _read_stream(spark, sf_dir, max_files=1)
-    with tempfile.TemporaryDirectory(prefix="engine_ckpt_") as ckpt:
-        q = (
-            s.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # a source with zero micro-batches (empty events dir) writes no
-    # partials — reading an empty dir raises, so fall back to an empty
-    # view with the same schema instead
-    has_parts = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(part_dir)
-        for f in files
-    )
-    if not has_parts:
+    t = _tx_sink(_read_stream(spark, sf_dir, max_files=1), _overwrite(add_partial))
+    # a source with zero micro-batches (empty events dir) commits no
+    # version: return an empty view with the same schema instead
+    if not t.versions():
         return spark.createDataFrame(
             [], "c_mktsegment string, n_purchases long, revenue double"
         )
-    parts = spark.read.option("recursiveFileLookup", "true").parquet(part_dir)
-    view = parts.groupBy("c_mktsegment").agg(
+    return t.read().groupBy("c_mktsegment").agg(
         F.sum("n").cast("long").alias("n_purchases"),
         (F.sum("cents").cast("double") / 100).alias("revenue"),
-    )
-    return view.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
 
 
 @query(
@@ -958,36 +927,21 @@ def stream_txlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     event times (quartile-cut files), so merge-last-wins ≡ global
     latest-per-key. At 100 TB the COW merge narrows to touched
     partitions (`cdc_partition_pruned_merge`'s shape); the manifest
-    commit stays one atomic rename per batch."""
-    from engine.txlog import TxTable
-
-    cols = ["user_id", "event_id", "ts", "value"]
-    root = io_tmpdir("engine_txsink_")
-    t = TxTable(spark, os.path.join(root, "tbl"))
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        token = f"batch={batch_id}"
-        if any(op.endswith(f"#{token}") for op in t.ops()):
-            return  # redelivered batch: already committed, exactly-once no-op
-        latest = dedup_extract(batch_df.select(*cols), ["user_id"], "ts", "event_id")
-        if not t.versions():
-            t.create(latest, n_files=2, note=token)
-        else:
-            t.merge(latest, "user_id", n_files=2, note=token)
-
-    s = _read_stream(spark, sf_dir, max_files=1)
-    with tempfile.TemporaryDirectory(prefix="engine_ckpt_") as ckpt:
-        q = (
-            s.writeStream.foreachBatch(commit_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    commit stays one atomic link per batch."""
+    t = _tx_sink(_read_stream(spark, sf_dir, max_files=1), _upsert)
     n_versions = len(t.versions())
-    last_id = n_versions - 1
     # simulate at-least-once redelivery with a poisoned payload: if the
     # idempotence token were ignored, the raw feed would corrupt the table
-    commit_batch(load_tables(spark, sf_dir)["events"], last_id)
+    _once(t, _upsert)(load_tables(spark, sf_dir)["events"], n_versions - 1)
     assert len(t.versions()) == n_versions, "replayed batch must be a no-op"
     return t.read().select("user_id", "event_id", "value").localCheckpoint(eager=True)
+
+
+def _upsert(t, batch_df: DataFrame, token: str) -> None:
+    """stream_txlog_sink's commit: the batch's latest-per-key rows as a
+    CREATE (first batch) or a copy-on-write MERGE on user_id."""
+    latest = dedup_extract(batch_df.select(*_CDC_COLS), ["user_id"], "ts", "event_id")
+    if not t.versions():
+        t.create(latest, n_files=2, note=token)
+    else:
+        t.merge(latest, "user_id", n_files=2, note=token)

@@ -30,6 +30,10 @@ parquet + JSON manifests:
   touched files via min/max pruning — same algebra, smaller working set
   (the partition-pruned variant of this rewrite is already pinned by
   `cdc_partition_pruned_merge`).
+- OVERWRITE replaces the rows as one version, pinned to the version the
+  writer read; it is the per-batch commit of the streaming snapshot sinks
+  (``engine/streaming.py`` ``_tx_sink``), whose op note carries the
+  batch-id idempotence token. CREATE is the same write under its own op.
 
 At 100 TB the manifest is the thing that makes planning O(files listed)
 instead of O(objects in the prefix) — no eventual-consistency listing,
@@ -141,7 +145,7 @@ class TxTable:
             os.unlink(tmp)
         return version
 
-    def _write_files(self, df: DataFrame, n_files: int, tag: str) -> list[str]:
+    def _write_files(self, df: DataFrame, n_files: int | None, tag: str) -> list[str]:
         # mkdtemp, not a deterministic tag dir: two writers staging the
         # same target version concurrently must not overwrite each
         # other's data files before the manifest race even happens (the
@@ -150,8 +154,9 @@ class TxTable:
         # repartition, not coalesce: coalesce can only REDUCE partition
         # count, so a 1-split input would silently produce 1 file and the
         # manifest file-count contract would depend on the reader's split
-        # arithmetic rather than on this writer
-        df.repartition(n_files).write.mode("overwrite").parquet(out)
+        # arithmetic rather than on this writer. n_files=None keeps the
+        # plan's own partitioning (no extra shuffle, no file-count contract)
+        (df if n_files is None else df.repartition(n_files)).write.mode("overwrite").parquet(out)
         # manifest entries are RELATIVE to data_dir — see _abs()
         return [
             os.path.relpath(os.path.join(out, f), self.data_dir)
@@ -161,8 +166,33 @@ class TxTable:
 
     # -- table operations -------------------------------------------------
     def create(self, df: DataFrame, n_files: int = 4, note: str = "") -> int:
-        op = "CREATE" + (f"#{note}" if note else "")
-        return self._commit(self._write_files(df, n_files, "base"), op)
+        """The table's first rows: :meth:`overwrite` logged as op CREATE."""
+        return self.overwrite(df, n_files, note, op="CREATE")
+
+    def overwrite(
+        self,
+        df: DataFrame,
+        n_files: int | None = None,
+        note: str = "",
+        expected_version: int | None = None,
+        *,
+        op: str = "OVERWRITE",
+    ) -> int:
+        """Replace the table's rows with ``df`` as ONE new version, op
+        ``OVERWRITE#note``. ``expected_version`` is the version the
+        caller derived ``df`` for: latest-at-read + 1, or 0 if it read
+        an empty table (default: the next version when this is called).
+        If another writer commits first, this raises
+        :class:`CommitConflict` instead of clobbering it, and the staged
+        files stay unreferenced orphans. ``note`` is the streaming
+        sinks' batch-id idempotence token; ``n_files=None`` writes the
+        plan's own partitioning."""
+        if expected_version is None:
+            vs = self.versions()
+            expected_version = vs[-1] + 1 if vs else 0
+        files = self._write_files(df, n_files, "base")  # the table's new base
+        op += f"#{note}" if note else ""
+        return self._commit(files, op, expected_version=expected_version)
 
     def read(self, version: int | None = None) -> DataFrame:
         v = self.versions()[-1] if version is None else version

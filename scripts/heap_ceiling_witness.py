@@ -38,7 +38,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -62,7 +61,7 @@ def main() -> None:
     from engine.io import shuffle_partitions_for
 
     registry.load_all()
-    from engine.streaming import stream_stream_join_plan
+    from engine.streaming import _drain, stream_stream_join_plan
 
     parts = shuffle_partitions_for(sf_dir)
     spark = (
@@ -98,15 +97,7 @@ def main() -> None:
 
     spark.streams.addListener(Peak())
     t0 = time.perf_counter()
-    with tempfile.TemporaryDirectory(prefix="engine_witness_ckpt_") as ckpt:
-        q = (
-            stream_stream_join_plan(spark, sf_dir)
-            .writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(stream_stream_join_plan(spark, sf_dir).writeStream.format("noop"))
     wall = round(time.perf_counter() - t0, 3)
     time.sleep(0.5)  # drain async listener events
     print(

@@ -645,6 +645,22 @@ def test_cosine_helpers_and_pair_kernel_have_one_home():
         assert src.count(needle) == 1, f"{needle!r} appears {src.count(needle)} times in engine/"
 
 
+def test_streaming_sinks_have_one_commit_path():
+    """One implementation per concept: every foreachBatch sink commits
+    through streaming._tx_sink (TxTable versions, no hand-rolled
+    ``v{batch_id}`` snapshot dirs) and every availableNow query drains
+    through streaming._drain. A second copy of either fails here."""
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for rel in ("engine/streaming.py", "tests/test_streaming.py"):
+        assert 'startswith("v")' not in open(os.path.join(root, rel)).read(), rel
+    src = "".join(open(p).read() for p in sorted(glob.glob(os.path.join(root, "engine", "*.py"))))
+    for needle in ("trigger(availableNow=True)", ".foreachBatch("):
+        assert src.count(needle) == 1, f"{needle!r} appears {src.count(needle)} times in engine/"
+
+
 def test_plan_cache_is_prepared_statement_not_result_cache(spark):
     """The r06 plan cache (registry.query(plan_cache=True)) must reuse ONLY
     the Python-built expression tree. Each call must produce a distinct

@@ -2,7 +2,18 @@
 
 from __future__ import annotations
 
-from engine import registry
+import os
+import shutil
+import time
+
+import pytest
+from pyspark.sql.readwriter import DataFrameWriter
+
+from engine import registry, streaming
+from engine.cdc import dedup_extract
+from engine.io import load_tables
+from engine.txlog import CommitConflict, TxTable
+from tests.oracle import compare
 
 registry.load_all()
 
@@ -24,94 +35,175 @@ def test_cdc_pipeline_idempotent_vs_batch(spark, sf_dir):
     assert s == b
 
 
-def test_cdc_pipeline_checkpoint_restart_exactly_once(spark, sf_dir):
-    """Recovery semantics across a query RESTART: run the CDC merge over
-    half the feed with a persistent checkpoint, stop, add the rest of the
-    files, restart from the same checkpoint. The restarted query must
-    process ONLY the new files (no version is written for an
-    already-committed batch — at-least-once delivery + idempotent merge
-    + checkpoint = exactly-once state), and the final snapshot must equal
-    the batch latest-per-key over the whole feed."""
-    import os
-    import shutil
-    import tempfile
-    import time
+def _copy_feed(spark, sf_dir, feed, parts):
+    """Copy time-quartile input files into ``feed``, one mtime apart."""
+    src = streaming._events_stream_dir(spark, sf_dir)
+    for b in parts:
+        shutil.copytree(os.path.join(src, b), os.path.join(feed, b))
+        time.sleep(0.05)
 
-    from pyspark.sql import functions as F
 
-    from engine.cdc import dedup_extract
-    from engine.io import load_tables
-    from engine.streaming import _events_stream_dir
+def _stream(spark, sf_dir, feed):
+    schema = load_tables(spark, sf_dir)["events"].schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(feed)
+    )
 
-    src = _events_stream_dir(spark, sf_dir)
-    cols = ["user_id", "event_id", "ts", "value"]
-    with tempfile.TemporaryDirectory(prefix="engine_restart_") as base:
-        feed = os.path.join(base, "feed")
-        snap = os.path.join(base, "snap")
-        ckpt = os.path.join(base, "ckpt")
-        os.makedirs(feed)
-        os.makedirs(snap)
 
-        def merge_batch(batch_df, batch_id):
-            sp = batch_df.sparkSession
-            versions = sorted(
-                (d for d in os.listdir(snap) if d.startswith("v")),
-                key=lambda d: int(d[1:]),
-            )
-            incoming = batch_df.select(*cols)
-            if versions:
-                prev = sp.read.parquet(os.path.join(snap, versions[-1]))
-                incoming = prev.unionByName(incoming)
-            new_snap = dedup_extract(incoming, ["user_id"], "ts", "event_id")
-            new_snap.write.mode("overwrite").parquet(
-                os.path.join(snap, f"v{batch_id}")
-            )
+def _rows(df):
+    return {tuple(r) for r in df.collect()}
 
-        def run_once():
-            schema = load_tables(spark, sf_dir)["events"].schema
-            s = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .option("recursiveFileLookup", "true")
-                .parquet(feed)
-            )
-            q = (
-                s.writeStream.foreachBatch(merge_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
 
-        for b in ("b0", "b1"):
-            shutil.copytree(os.path.join(src, b), os.path.join(feed, b))
-            time.sleep(0.05)
-        run_once()
-        v1 = {d for d in os.listdir(snap) if d.startswith("v")}
-        assert len(v1) == 2, f"phase 1 should commit 2 micro-batches, got {v1}"
+def test_cdc_pipeline_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
+    """Recovery semantics across a query RESTART: run stream_cdc_pipeline's
+    commit over half the feed with a persistent checkpoint and table,
+    stop, add the rest of the files, restart from the same checkpoint.
+    The restarted query must process ONLY the new files (no version is
+    committed for an already-committed batch — at-least-once delivery +
+    batch-id token + checkpoint = exactly-once state), and the final
+    table must equal the batch latest-per-key over the whole feed."""
+    feed, table, ckpt = (str(tmp_path / d) for d in ("feed", "tbl", "ckpt"))
+    commit = streaming._overwrite(streaming._merge_latest)
 
-        for b in ("b2", "b3"):
-            shutil.copytree(os.path.join(src, b), os.path.join(feed, b))
-            time.sleep(0.05)
-        run_once()
-        v2 = {d for d in os.listdir(snap) if d.startswith("v")}
-        assert len(v2 - v1) == 2, (
-            f"restart must process ONLY the 2 new files; versions {v1} -> {v2}"
+    _copy_feed(spark, sf_dir, feed, ("b0", "b1"))
+    t = streaming._tx_sink(_stream(spark, sf_dir, feed), commit, table, ckpt)
+    v1 = t.versions()
+    assert len(v1) == 2, f"phase 1 should commit 2 micro-batches, got {t.ops()}"
+
+    _copy_feed(spark, sf_dir, feed, ("b2", "b3"))
+    streaming._tx_sink(_stream(spark, sf_dir, feed), commit, table, ckpt)
+    v2 = t.versions()
+    assert len(v2) - len(v1) == 2, (
+        f"restart must process ONLY the 2 new files; ops {t.ops()}"
+    )
+    assert t.ops() == [f"OVERWRITE#batch={i}" for i in range(4)]
+
+    batch = dedup_extract(load_tables(spark, sf_dir)["events"], ["user_id"], "ts", "event_id")
+    assert _rows(t.read().select(*streaming._CDC_COLS)) == _rows(
+        batch.select(*streaming._CDC_COLS)
+    )
+
+
+def test_snapshot_commit_rejects_write_since_its_read(spark, sf_dir, tmp_path):
+    """A snapshot sink's commit is pinned to the version it read: if
+    another writer commits between the read of ``prev`` and the
+    overwrite, the commit raises CommitConflict instead of committing a
+    merge built on the stale ``prev`` (which would drop the winner's
+    rows — the lost update)."""
+    ev = load_tables(spark, sf_dir)["events"].select(*streaming._CDC_COLS)
+    first, second = ev.where("user_id % 2 = 0"), ev.where("user_id % 2 = 1")
+    t = TxTable(spark, str(tmp_path / "tbl"))
+    commit = streaming._overwrite(streaming._merge_latest)
+    commit(t, first, "batch=0")
+
+    def merge_while_winner_commits(prev, batch_df):
+        TxTable(spark, t.path).overwrite(second, note="winner")
+        return streaming._merge_latest(prev, batch_df)
+
+    with pytest.raises(CommitConflict):
+        streaming._overwrite(merge_while_winner_commits)(t, first, "batch=1")
+    assert t.ops() == ["OVERWRITE#batch=0", "OVERWRITE#winner"]
+    assert _rows(t.read()) == _rows(second)
+
+
+# (commit, output columns of the registered key) per foreachBatch sink;
+# the key's own DuckDB oracle is the batch truth for the final table
+_SINK_COMMITS = {
+    "sink_foreachBatch_merge": (
+        streaming._overwrite(streaming._merge_join), ["user_id", "event_id", "value"]
+    ),
+    "stream_cdc_pipeline": (
+        streaming._overwrite(streaming._merge_latest), streaming._CDC_COLS
+    ),
+    "stream_scd2_foreachbatch": (
+        streaming._overwrite(streaming._merge_scd2),
+        ["user_id", "event_id", "value", "effective_from", "effective_to", "is_current"],
+    ),
+    "stream_txlog_sink": (streaming._upsert, ["user_id", "event_id", "value"]),
+}
+_uninterrupted: dict[str, set] = {}
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _killed_parquet(writer, path, *args, **kwargs):
+    """A parquet write killed mid-job: its output dir holds only
+    ``_temporary/0`` (what a killed process leaves), then the batch dies."""
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(os.path.join(path, "_temporary", "0"))
+    raise _Crash(f"killed while writing {path}")
+
+
+def _staged(t):
+    return set(os.listdir(t.data_dir))
+
+
+def _referenced(t):
+    return {f.split(os.sep)[0] for v in t.versions() for f in t.manifest(v)["files"]}
+
+
+@pytest.mark.parametrize("crash", ["mid_write", "after_commit"])
+@pytest.mark.parametrize("sink", sorted(_SINK_COMMITS))
+def test_sink_survives_crash_mid_batch(spark, sf_dir, tmp_path, monkeypatch, sink, crash):
+    """Exactly-once across a CRASH inside the third micro-batch (batch
+    id 2), not only a clean restart. ``mid_write``: the batch's data
+    write dies leaving a staging dir with only ``_temporary/0``, before
+    any manifest commits. ``after_commit``: the manifest commits, then
+    the batch function dies before returning to Spark. Either way the
+    checkpoint holds ``offsets/2`` and no ``commits/2``, so Spark replays
+    batch 2 on restart; the table must then equal an uninterrupted run
+    and the batch oracle, with one ``#batch={id}`` token per batch, and
+    the crashed attempt's files in no manifest."""
+    commit, cols = _SINK_COMMITS[sink]
+    feed, table, ckpt = (str(tmp_path / d) for d in ("feed", "tbl", "ckpt"))
+    _copy_feed(spark, sf_dir, feed, ("b0", "b1", "b2", "b3"))
+    if sink not in _uninterrupted:
+        clean = streaming._tx_sink(
+            _stream(spark, sf_dir, feed), commit, str(tmp_path / "clean"), str(tmp_path / "ck0")
         )
+        _uninterrupted[sink] = _rows(clean.read())
 
-        final_dir = max(v2, key=lambda d: int(d[1:]))
-        final = {
-            tuple(r)
-            for r in spark.read.parquet(os.path.join(snap, final_dir))
-            .select(*cols)
-            .collect()
-        }
-        batch = {
-            tuple(r)
-            for r in dedup_extract(
-                load_tables(spark, sf_dir)["events"], ["user_id"], "ts", "event_id"
-            )
-            .select(*cols)
-            .collect()
-        }
-        assert final == batch
+    with monkeypatch.context() as m:
+        if crash == "mid_write":
+            real_write = TxTable._write_files
+
+            def write_files(self, df, n_files, tag):
+                if len(self.versions()) == 2:  # the third batch
+                    m.setattr(DataFrameWriter, "parquet", _killed_parquet)
+                return real_write(self, df, n_files, tag)
+
+            m.setattr(TxTable, "_write_files", write_files)
+        else:
+            real_commit = TxTable._commit
+
+            def commit_then_die(self, files, op, expected_version=None):
+                v = real_commit(self, files, op, expected_version)
+                if op.endswith("#batch=2"):
+                    raise _Crash(f"died after committing {op}")
+                return v
+
+            m.setattr(TxTable, "_commit", commit_then_die)
+        with pytest.raises(Exception, match="_Crash"):
+            streaming._tx_sink(_stream(spark, sf_dir, feed), commit, table, ckpt)
+
+    assert os.path.exists(os.path.join(ckpt, "offsets", "2"))
+    assert not os.path.exists(os.path.join(ckpt, "commits", "2"))
+    t = TxTable(spark, table)
+    crashed = _staged(t) - _referenced(t)
+    if crash == "mid_write":
+        (d,) = crashed
+        assert len(t.versions()) == 2
+        assert os.listdir(os.path.join(t.data_dir, d)) == ["_temporary"]
+
+    streaming._tx_sink(_stream(spark, sf_dir, feed), commit, table, ckpt)
+    assert [op.split("#", 1)[1] for op in t.ops()] == [f"batch={i}" for i in range(4)]
+    assert not (crashed & _referenced(t)), "a crashed attempt's files must stay unreferenced"
+    assert _staged(t) - _referenced(t) == crashed
+    assert _rows(t.read()) == _uninterrupted[sink]
+    ok, msg = compare(t.read().select(*cols), sf_dir, registry.ORACLE_SQL[sink])
+    assert ok, f"{sink} after a {crash} crash: {msg}"

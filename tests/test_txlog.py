@@ -138,6 +138,53 @@ def test_orphaned_staged_files_invisible_and_reclaimable(spark, orders_small, tm
     assert on_disk - referenced == staged_abs, "only the orphans may dangle"
 
 
+def test_overwrite_replaces_rows_and_rejects_stale_writer(spark, orders_small, tmp_path):
+    """overwrite() commits exactly the new rows as op OVERWRITE#note (v0
+    on an empty table), and create() is the same write logged as CREATE.
+    A write derived from a version that is no longer latest must raise
+    CommitConflict, never clobber the winner, and leave its staged files
+    unreferenced — whether the winner commits between the read and the
+    overwrite call or while the overwrite stages its files."""
+    t = TxTable(spark, str(tmp_path / "tbl"))
+    assert t.overwrite(orders_small, n_files=1, note="batch=0") == 0
+    new = orders_small.where(F.col("o_orderkey") % 3 == 0)
+    assert t.overwrite(new, n_files=2, note="batch=1") == 1
+    assert t.ops() == ["OVERWRITE#batch=0", "OVERWRITE#batch=1"]
+    assert len(t.manifest(1)["files"]) == 2
+    assert sorted(t.read().collect()) == sorted(new.collect())
+    c = TxTable(spark, str(tmp_path / "created"))
+    assert c.create(new, n_files=3, note="x") == 0
+    assert c.ops() == ["CREATE#x"] and len(c.manifest(0)["files"]) == 3
+
+    staged: list[str] = []
+    real_write = TxTable._write_files
+
+    def record(self, df, n_files, tag):
+        staged.extend(real_write(self, df, n_files, tag))
+        return staged
+
+    # the winner commits between the loser's read (v1) and its overwrite
+    stale = t.read(1).where(F.col("o_orderkey") % 2 == 0)
+    assert TxTable(spark, t.path).overwrite(orders_small, note="winner") == 2
+    t._write_files = record.__get__(t)
+    with pytest.raises(CommitConflict):
+        t.overwrite(stale, note="loser", expected_version=2)
+
+    # the winner commits while the loser stages (target pinned at call)
+    def write_then_lose_race(df, n_files, tag):
+        record(t, df, n_files, tag)
+        TxTable(spark, t.path).overwrite(orders_small, n_files=1, note="winner2")
+        return staged
+
+    t._write_files = write_then_lose_race
+    with pytest.raises(CommitConflict):
+        t.overwrite(new, n_files=1, note="loser2")
+    assert t.ops()[-2:] == ["OVERWRITE#winner", "OVERWRITE#winner2"]
+    referenced = {f for v in t.versions() for f in t.manifest(v)["files"]}
+    assert staged and not (set(staged) & referenced)
+    assert sorted(t.read().collect()) == sorted(orders_small.collect())
+
+
 def test_vacuum_reclaims_conflict_orphans(spark, orders_small, tmp_path):
     """ADVICE r09: orphaned staged files appear in NO manifest, so the
     manifest set-difference alone can never reclaim them — each lost
