@@ -16,7 +16,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from engine.cdc import (
+    ORDERS_SPEC,
     SourceSpec,
+    _prev_curr,
     apply_changes,
     dedup_extract,
     incremental_upsert,
@@ -197,3 +199,65 @@ def test_dedup_extract_latest_wins(spark, data):
     per_key = out.groupBy("k").count().where(F.col("count") > 1).count()
     assert per_key == 0
     assert out.count() == df.select("k").distinct().count()
+
+
+def test_snapshot_diff_build_py4j_round_trips(spark, sf_dir, monkeypatch):
+    """Building the diff's plan is SQL-expression strings, not one py4j
+    call per Column operator: one build for the orders spec stays within
+    100 round trips on the building thread (1,091 when built from Column
+    calls). py4j's own thread releasing Java objects of earlier tests is
+    not the build's."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    prev, curr = _prev_curr(spark, sf_dir)
+    calls = []
+    me = threading.get_ident()
+    real = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kw):
+        if threading.get_ident() == me:
+            calls.append(command[:1])
+        return real(self, command, *args, **kw)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    snapshot_diff(prev, curr, ORDERS_SPEC)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 100, len(calls)
+
+
+def test_snapshot_diff_quotes_config_names(spark):
+    """Config-driven names that SQL would split or misparse — a space, a
+    dot, a backtick — each still name one column: every op, merged value
+    and key_hash matches the hand-built expectation."""
+    import hashlib
+
+    schema = T.StructType(
+        [
+            T.StructField("a b", T.IntegerType(), True),
+            T.StructField("x.y", T.StringType(), True),
+            T.StructField("we`ird", T.StringType(), True),
+        ]
+    )
+    spec = SourceSpec(name="t", key_cols=("a b", "x.y"), tracked_cols=("we`ird",))
+    prev = spark.createDataFrame(
+        [(1, "p", "old"), (2, "q", "same"), (3, "r", "gone"), (None, "n", None)], schema
+    )
+    curr = spark.createDataFrame(
+        [(1, "p", "new"), (2, "q", "same"), (4, "s", "ins"), (None, "n", None)], schema
+    )
+    got = {
+        (r["a b"], r["x.y"]): (r["op"], r["we`ird"], r["key_hash"])
+        for r in snapshot_diff(prev, curr, spec).collect()
+    }
+
+    def kh(a, x):
+        s = "||".join("<NULL>" if v is None else str(v) for v in (a, x))
+        return hashlib.md5(s.encode()).hexdigest()
+
+    want = {
+        (1, "p"): "U", (2, "q"): "N", (3, "r"): "D", (4, "s"): "I", (None, "n"): "N"
+    }
+    value = {(1, "p"): "new", (2, "q"): "same", (3, "r"): "gone", (4, "s"): "ins"}
+    assert got == {k: (op, value.get(k), kh(*k)) for k, op in want.items()}

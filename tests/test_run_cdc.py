@@ -448,3 +448,104 @@ def test_read_extract_formats(spark, tmp_path, cli):
         cli._read_extract(spark, dict(src, format="json"), gen.run_date(0))
     with pytest.raises(ValueError, match="unknown format"):
         cli._read_extract(spark, dict(src, format="orc"), gen.run_date(0))
+
+
+# ---------------------------------------------------------------------------
+# the _LATEST flip: a symlink rename, never a regular file renamed over one
+
+
+def _pointer_files(out: str, name: str) -> list[str]:
+    return sorted(f for f in os.listdir(os.path.join(out, name)) if f.startswith("_LATEST."))
+
+
+def test_pointer_flip_is_metadata_only(spark, tmp_path, cli, monkeypatch):
+    """Over a 3-day chain no rename run_source makes moves a regular file
+    onto an existing path (ext4 flushes the renamed file's data for that
+    one: ~50 ms a day); _LATEST is a symlink to the one pointer file left,
+    which names the day's snapshot. Re-running an older day leaves the
+    pointer, its file and the directory listing exactly as they were."""
+    src, truth = gen.cdc_days(str(tmp_path / "extracts"), 11, 3, 500)
+    out = str(tmp_path / "out")
+    ptr = os.path.join(out, "orders", "_LATEST")
+    moves = []
+
+    def recording(real):
+        def move(a, b, *args, **kw):
+            regular = os.path.isfile(a) and not os.path.islink(a)
+            moves.append((a, b, regular, os.path.lexists(b)))
+            return real(a, b, *args, **kw)
+
+        return move
+
+    monkeypatch.setattr(os, "replace", recording(os.replace))
+    monkeypatch.setattr(os, "rename", recording(os.rename))
+    for day in range(3):
+        s = cli.run_source(spark, out, src, gen.run_date(day))
+        assert s["counts"] == truth[day], day
+        assert os.path.islink(ptr)
+        assert open(ptr).read() == s["snapshot"]
+        assert _pointer_files(out, "orders") == [os.readlink(ptr)]
+    assert [m for m in moves if m[2] and m[3]] == [], "regular file renamed over a path"
+    assert sum(1 for a, b, _, existed in moves if b == ptr and existed) == 2
+
+    before = (os.readlink(ptr), _pointer_files(out, "orders"))
+    n_moves = len(moves)
+    s = cli.run_source(spark, out, src, gen.run_date(1))
+    assert s["counts"] == truth[1]
+    assert (os.readlink(ptr), _pointer_files(out, "orders")) == before
+    assert all(b != ptr for _, b, _, _ in moves[n_moves:]), "older day moved _LATEST"
+
+
+def _fake_snapshot(out: str, name: str, run_date: str) -> str:
+    d = os.path.join(out, name, "snapshot", f"run_date={run_date}")
+    os.makedirs(d)
+    open(os.path.join(d, "_SUCCESS"), "w").close()
+    return d
+
+
+def test_pointer_resolution_and_orphan_sweep(tmp_path, cli):
+    """A legacy regular-file _LATEST is read, then upgraded to a symlink by
+    the next flip. An empty pointer file, a dangling link and a dir all
+    read as "no pointer": the newest complete snapshot answers. Pointer
+    files _LATEST does not name are swept once aged; a young one and the
+    live one survive."""
+    out = str(tmp_path)
+    d1, d2 = _fake_snapshot(out, "t", "d1"), _fake_snapshot(out, "t", "d2")
+    ptr = os.path.join(out, "t", "_LATEST")
+    with open(ptr, "w") as fh:  # the legacy one-line pointer file
+        fh.write(d1 + "\n")
+    assert cli._resolve_latest(out, "t") == d1
+    cli._publish_pointer(out, "t", d2, "d2")
+    assert os.path.islink(ptr) and cli._resolve_latest(out, "t") == d2
+    assert _pointer_files(out, "t") == [os.readlink(ptr)]
+    cli._publish_pointer(out, "t", d1, "d1")  # forward-only is run_source's rule
+    assert cli._resolve_latest(out, "t") == d1
+    assert _pointer_files(out, "t") == [os.readlink(ptr)]
+
+    live = os.path.join(out, "t", os.readlink(ptr))
+    open(live, "w").close()  # zero-length pointer file
+    assert cli._resolve_latest(out, "t") == d2
+    os.remove(live)  # dangling link
+    assert cli._resolve_latest(out, "t") == d2
+    os.remove(ptr)
+    os.makedirs(ptr)  # not a file at all
+    assert cli._resolve_latest(out, "t") == d2
+    os.rmdir(ptr)
+
+    cli._publish_pointer(out, "t", d2, "d2")
+    aged = time.time() - 2 * cli._STALE_DIR_GRACE_SEC
+    live = os.path.join(out, "t", os.readlink(ptr))
+    orphan = os.path.join(out, "t", "_LATEST.d3.deadbeef")
+    link = os.path.join(out, "t", "_LATEST.deadbeef.link")
+    young = os.path.join(out, "t", "_LATEST.d3.cafef00d")
+    for p in (orphan, young):
+        with open(p, "w") as fh:
+            fh.write(d2)
+    os.symlink(os.path.basename(orphan), link)
+    for p in (orphan, live):
+        os.utime(p, (aged, aged))
+    os.utime(link, (aged, aged), follow_symlinks=False)
+    assert cli._sweep_stale_dirs(out, "t") == 2
+    assert not os.path.lexists(orphan) and not os.path.lexists(link)
+    assert os.path.exists(young) and os.path.exists(live)
+    assert cli._resolve_latest(out, "t") == d2
