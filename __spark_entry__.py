@@ -49,11 +49,13 @@ _PROMOTED_R13 = [
     "llm_embed_norm",            # _norm2 moved to llm_ext
     "fn_array_hof",              # norm² via llm_ext._norm2
     # foreachBatch sinks moved onto one TxTable commit path (one version
-    # per micro-batch, batch-id token, atomic manifest publish):
+    # per micro-batch, batch-id token, atomic manifest publish), then
+    # returned as a plain read of the committed version (manifest schema,
+    # no localCheckpoint copy — the optimized plan changed for all five):
     "sink_foreachBatch_merge",   # join-shaped merge → TxTable.overwrite
     "stream_cdc_pipeline",       # union+dedup merge → TxTable.overwrite
     "stream_scd2_foreachbatch",  # SCD2 re-window → TxTable.overwrite
-    "stream_txlog_sink",         # shared token check + _drain
+    "stream_txlog_sink",         # shared token check; plan's own partitioning
     "stream_join_ivm",           # partial set as TxTable versions
 ]
 

@@ -133,8 +133,21 @@ def snapshot_diff(prev: DataFrame, curr: DataFrame, spec: SourceSpec) -> DataFra
     takes 41 py4j round trips and 13-17 ms of a perfbench CLI day (1,091
     and 37-42 ms when each operator was a py4j Column call). Both folds
     are left folds, so the optimized plan is the Column-built one's.
+
+    prev's columns become ``p_<name>`` beside curr's, and the sides carry
+    ``p_present``/``c_present`` flags. A spec column with one of those
+    names would be an ambiguous reference at the join, so it raises
+    ``ValueError`` naming the column before any Spark call (compared
+    case-insensitively, as Spark resolves names by default).
     """
     cols = (*spec.key_cols, *spec.tracked_cols)
+    internal = {n.lower() for n in ("p_present", "c_present", *["p_" + c for c in cols])}
+    clash = [c for c in cols if c.lower() in internal]
+    if clash:
+        raise ValueError(
+            f"snapshot_diff: spec column {clash[0]!r} collides with a name the diff "
+            "uses internally (p_<spec column>, p_present, c_present)"
+        )
     p = prev.selectExpr("true AS p_present", *[f"{_q(c)} AS {_q('p_' + c)}" for c in cols])
     c = curr.selectExpr("true AS c_present", *[_q(c) for c in cols])
     j = c.join(p, F.expr(_fold("AND", [f"{_q(k)} <=> {_q('p_' + k)}" for k in spec.key_cols])),

@@ -53,8 +53,10 @@ def query(
 
     ``plan_cache=True`` opts a PURE-READ key (no build-time side effects,
     no driver-side iteration) into the prepared-plan cache above. Keys
-    whose build step writes files or collects data must stay opted out —
-    caching would freeze those side effects.
+    whose build step writes files, collects data or checkpoints must stay
+    opted out — caching would freeze those side effects, and every later
+    call would reuse the first call's materialized data. A cached key's
+    build runs 0 Spark jobs (``tests/test_plans.py`` checks every one).
     """
 
     def deco(fn: QueryFn) -> QueryFn:

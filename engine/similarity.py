@@ -1319,6 +1319,7 @@ def llm_ann_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT idb AS drop_id, CAST(min(ida) AS BIGINT) AS keep_id, cell
     FROM pr WHERE cos >= {_NEAR_DUP_TAU} GROUP BY idb, cell
     """,
+    plan_cache=True,
 )
 def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-shaped semantic dedup (Abbas et al. 2023, public arXiv
@@ -1527,7 +1528,7 @@ def _pq_oracle() -> str:
     )
 
 
-@query("llm_ann_pq", oracle=_pq_oracle(), plan_cache=True)
+@query("llm_ann_pq", oracle=_pq_oracle())
 def llm_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jégou et al., TPAMI 2011 shape): the
     64-dim space splits into 8 subspaces × 16-centroid codebooks (4-bit
@@ -1554,7 +1555,9 @@ def llm_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ADC table (queries × 8 × 16 rows) broadcasts; raw embeddings are
     touched only for the ≤256-per-query shortlist re-rank and the
     (per-vector, once) norm precompute. Training is fully declarative —
-    no driver-side model state."""
+    no driver-side model state. Not plan-cached: the build checkpoints the
+    normalized corpus (one Spark job), so a cached plan would hand every
+    later call the first call's copy."""
     e = load_tables(spark, sf_dir)["embeddings"]
     p = pq_parts(e)
     return p["mine"].join(p["exact"], ["qid", "rn"]).select(

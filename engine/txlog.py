@@ -11,7 +11,11 @@ parquet + JSON manifests:
 
 - A table is ``<path>/data/*.parquet`` plus ``<path>/_log/vNNNNN.json``;
   manifest v is the FULL file listing of version v (Iceberg-style
-  snapshot manifest — no log replay needed to read).
+  snapshot manifest — no log replay needed to read) and the table's
+  schema as the parquet read sees it, so ``read()`` plans from the
+  manifest alone: 0 Spark jobs, where inferring the schema from the
+  files' footers costs one job per read. A manifest without a schema
+  (written before it was recorded) still reads by inference.
 - Commits write the manifest to a temp name and publish it with
   ``os.link`` (create-exclusive: fails with EEXIST if the version
   already exists) — atomic on a POSIX filesystem AND mutually
@@ -50,6 +54,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from engine.io import load_tables
 from engine.registry import query
@@ -65,6 +70,19 @@ class CommitConflict(Exception):
     sweep once they are older than ``orphan_grace_sec`` (they appear in
     no manifest, so the manifest set-difference alone could never find
     them — ADVICE r09)."""
+
+
+def _as_read(t):
+    """A schema's ``jsonValue()`` as a parquet read of its files infers
+    it: Spark writes parquet with every field, array element and map
+    value nullable."""
+    if not isinstance(t, dict):
+        return t
+    return {
+        k: True if k in ("nullable", "containsNull", "valueContainsNull")
+        else v if k == "metadata" else _as_read(v)
+        for k, v in t.items()
+    }
 
 
 class TxTable:
@@ -116,8 +134,16 @@ class TxTable:
     def ops(self) -> list[str]:
         return [self.manifest(v)["op"] for v in self.versions()]
 
-    def _commit(self, files: list[str], op: str, expected_version: int | None = None) -> int:
-        """Publish a manifest with putIfAbsent semantics.
+    def _commit(
+        self,
+        files: list[str],
+        op: str,
+        expected_version: int | None = None,
+        *,
+        schema: StructType | None = None,
+    ) -> int:
+        """Publish a manifest with putIfAbsent semantics; ``schema`` is
+        the written frame's, recorded for :meth:`read`.
 
         ``expected_version`` pins the version this transaction's files
         were derived for (latest-at-read + 1); if another writer got
@@ -133,6 +159,8 @@ class TxTable:
                 f"expected to commit v{expected_version} but latest is v{version - 1}"
             )
         doc = {"version": version, "op": op, "files": sorted(files)}
+        if schema is not None:
+            doc["schema"] = _as_read(schema.jsonValue())
         fd, tmp = tempfile.mkstemp(dir=self.log_dir, suffix=".tmp")
         with os.fdopen(fd, "w") as fh:
             json.dump(doc, fh)
@@ -165,7 +193,7 @@ class TxTable:
         ]
 
     # -- table operations -------------------------------------------------
-    def create(self, df: DataFrame, n_files: int = 4, note: str = "") -> int:
+    def create(self, df: DataFrame, n_files: int | None = 4, note: str = "") -> int:
         """The table's first rows: :meth:`overwrite` logged as op CREATE."""
         return self.overwrite(df, n_files, note, op="CREATE")
 
@@ -192,12 +220,16 @@ class TxTable:
             expected_version = vs[-1] + 1 if vs else 0
         files = self._write_files(df, n_files, "base")  # the table's new base
         op += f"#{note}" if note else ""
-        return self._commit(files, op, expected_version=expected_version)
+        return self._commit(files, op, expected_version=expected_version, schema=df.schema)
 
     def read(self, version: int | None = None) -> DataFrame:
+        """Version ``version`` (default: latest), pinned to its manifest."""
         v = self.versions()[-1] if version is None else version
-        files = [self._abs(f) for f in self.manifest(v)["files"]]
-        return self.spark.read.parquet(*files)
+        m = self.manifest(v)
+        r = self.spark.read
+        if "schema" in m:
+            r = r.schema(StructType.fromJson(m["schema"]))
+        return r.parquet(*[self._abs(f) for f in m["files"]])
 
     def stage_merge(self, updates: DataFrame, key: str, n_files: int = 4) -> tuple[int, list[str]]:
         """Derive + land a COW upsert's data files WITHOUT committing.
@@ -208,17 +240,21 @@ class TxTable:
         expected_version=target_version)`` is the write phase, and a
         :class:`CommitConflict` there means the snapshot went stale and
         the merge must be re-staged from the new latest."""
+        return self._stage_merge(updates, key, n_files)[:2]
+
+    def _stage_merge(self, updates: DataFrame, key: str, n_files: int | None):
+        """:meth:`stage_merge` plus the schema of the frame it wrote."""
         base = self.versions()[-1]
         cur = self.read(base)
         merged = cur.join(updates.select(key), key, "left_anti").unionByName(updates)
         target = base + 1
-        return target, self._write_files(merged, n_files, f"merge_v{target}")
+        return target, self._write_files(merged, n_files, f"merge_v{target}"), merged.schema
 
     def merge(
         self,
         updates: DataFrame,
         key: str,
-        n_files: int = 4,
+        n_files: int | None = 4,
         note: str = "",
         max_retries: int = 3,
     ) -> int:
@@ -232,28 +268,29 @@ class TxTable:
         whole merge re-derives from the NEW latest snapshot and retries
         — rebasing on top of the winning commit, never clobbering it —
         up to ``max_retries`` times (Delta's ConcurrentAppend semantics
-        at table granularity)."""
+        at table granularity). ``n_files=None`` writes the plan's own
+        partitioning."""
         op = "MERGE" + (f"#{note}" if note else "")
         for _ in range(max_retries + 1):
-            target, files = self.stage_merge(updates, key, n_files)
+            target, files, schema = self._stage_merge(updates, key, n_files)
             try:
-                return self._commit(files, op, expected_version=target)
+                return self._commit(files, op, expected_version=target, schema=schema)
             except CommitConflict:
                 continue  # snapshot went stale: re-derive and rebase
         raise CommitConflict(f"merge lost {max_retries + 1} commit races; giving up")
 
     def delete(self, predicate, n_files: int = 4) -> int:
-        cur = self.read()
+        kept = self.read().where(~predicate)
         tag = f"delete_v{len(self.versions())}"
         return self._commit(
-            self._write_files(cur.where(~predicate), n_files, tag), "DELETE"
+            self._write_files(kept, n_files, tag), "DELETE", schema=kept.schema
         )
 
     def optimize(self) -> int:
         """Compaction as a METADATA SWAP: same rows, one file."""
         cur = self.read()
         tag = f"optimize_v{len(self.versions())}"
-        return self._commit(self._write_files(cur, 1, tag), "OPTIMIZE")
+        return self._commit(self._write_files(cur, 1, tag), "OPTIMIZE", schema=cur.schema)
 
     def vacuum(self, retain_last: int, orphan_grace_sec: float = 86400.0) -> int:
         """Delete data files referenced by NO retained manifest; returns

@@ -22,3 +22,25 @@ def sf_dir():
     from tests.oracle import DEFAULT_SF_DIR
 
     return DEFAULT_SF_DIR
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` returns ``(fn(), Spark jobs started while fn
+    ran)``, diffed on the newest job id in the status store. A job group
+    would miss a streaming query's micro-batch jobs, which run under the
+    query's own group; job ids are sequential, so the diff counts them
+    too."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def newest() -> int:
+        sc.listenerBus().waitUntilEmpty()  # the store is fed asynchronously
+        jobs = sc.statusStore().jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    def count(fn):
+        before = newest()
+        out = fn()
+        return out, newest() - before
+
+    return count

@@ -261,3 +261,18 @@ def test_snapshot_diff_quotes_config_names(spark):
     }
     value = {(1, "p"): "new", (2, "q"): "same", (3, "r"): "gone", (4, "s"): "ins"}
     assert got == {k: (op, value.get(k), kh(*k)) for k, op in want.items()}
+
+
+@pytest.mark.parametrize(
+    "key, tracked, clash",
+    [(("k",), ("p_k",), "p_k"), (("p_present",), ("v",), "p_present"),
+     (("k",), ("C_Present",), "C_Present"), (("K",), ("v", "P_k"), "P_k")],
+)
+def test_snapshot_diff_rejects_internal_name_collision(key, tracked, clash):
+    """A spec column named like one the diff makes for itself (prev's
+    ``p_<column>``, the ``p_present``/``c_present`` flags; Spark matches
+    names case-insensitively) raises ValueError naming it instead of
+    AMBIGUOUS_REFERENCE at the join. The frames are never touched: the
+    check runs on the spec's names alone, before any Spark call."""
+    with pytest.raises(ValueError, match=repr(clash)):
+        snapshot_diff(None, None, SourceSpec(name="t", key_cols=key, tracked_cols=tracked))

@@ -704,6 +704,22 @@ def test_plan_cache_is_prepared_statement_not_result_cache(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_plan_cache_builds_run_no_job(spark, sf_dir, count_jobs):
+    """A plan_cache key's build is Python-side plan construction only:
+    the first build at sf0.01 runs 0 Spark jobs. A build that ran one (a
+    collect, an eager checkpoint) would freeze its result in the cache
+    and every later call would reuse it, which the cache must not do."""
+    from engine import registry
+    from engine.io import load_tables
+
+    load_tables(spark, sf_dir)  # the table cache is not the key's build
+    # plan_cache keys are registered as functools.wraps wrappers
+    cached = {k: f.__wrapped__ for k, f in registry.QUERIES.items() if hasattr(f, "__wrapped__")}
+    assert "llm_semdedup" in cached and "llm_ann_pq" not in cached
+    jobs = {k: count_jobs(lambda: build(spark, sf_dir))[1] for k, build in cached.items()}
+    assert not {k: n for k, n in jobs.items() if n}, jobs
+
+
 def test_session_caches_are_per_session(spark, sf_dir):
     """r10 (VERDICT r09 item 7): the table cache and the prepared-plan
     store are weakly keyed BY SESSION, so two live sessions must get

@@ -181,8 +181,8 @@ def test_sink_survives_crash_mid_batch(spark, sf_dir, tmp_path, monkeypatch, sin
         else:
             real_commit = TxTable._commit
 
-            def commit_then_die(self, files, op, expected_version=None):
-                v = real_commit(self, files, op, expected_version)
+            def commit_then_die(self, files, op, expected_version=None, **kw):
+                v = real_commit(self, files, op, expected_version, **kw)
                 if op.endswith("#batch=2"):
                     raise _Crash(f"died after committing {op}")
                 return v
@@ -207,3 +207,16 @@ def test_sink_survives_crash_mid_batch(spark, sf_dir, tmp_path, monkeypatch, sin
     assert _rows(t.read()) == _uninterrupted[sink]
     ok, msg = compare(t.read().select(*cols), sf_dir, registry.ORACLE_SQL[sink])
     assert ok, f"{sink} after a {crash} crash: {msg}"
+
+
+def test_txlog_sink_job_count(spark, sf_dir, count_jobs):
+    """One warm ``stream_txlog_sink`` call and the noop write of its
+    result run at most 15 Spark jobs (24 while every TxTable read
+    inferred its schema, the sink repartitioned each write to 2 files and
+    the key copied its table into a local checkpoint)."""
+    streaming._events_stream_dir(spark, sf_dir)  # the feed is written once
+    fn = registry.QUERIES["stream_txlog_sink"]
+    _, jobs = count_jobs(
+        lambda: fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    )
+    assert jobs <= 15, jobs

@@ -322,3 +322,47 @@ def test_two_process_commit_race(tmp_path):
     # with two tight-loop writers and a start barrier, contention is
     # effectively certain; zero conflicts would mean the race never ran
     assert results[0]["conflicts"] + results[1]["conflicts"] >= 1
+
+
+def test_manifest_schema_reads_without_a_job(spark, orders_small, tmp_path, count_jobs):
+    """Every commit records the written frame's schema as a parquet read
+    infers it (all fields nullable), and MERGE, DELETE and OPTIMIZE carry
+    it forward, so ``read()`` of any version plans with 0 Spark jobs
+    (one, to infer the schema from the files, without it) and returns
+    the committed rows."""
+    base = orders_small.withColumn("one", F.lit(1))  # a non-nullable column
+    t = TxTable(spark, str(tmp_path / "tbl"))
+    t.create(base, n_files=2)
+    upd = base.where(F.col("o_orderkey") % 7 == 0).withColumn(
+        "o_totalprice", F.col("o_totalprice") + 1
+    )
+    t.merge(upd, "o_orderkey")
+    t.delete(F.col("o_orderkey") % 10 == 0)
+    t.optimize()
+    assert [op.split("#")[0] for op in t.ops()] == ["CREATE", "MERGE", "DELETE", "OPTIMIZE"]
+    inferred = spark.read.parquet(*[t._abs(f) for f in t.manifest(0)["files"]]).schema
+    assert not base.schema["one"].nullable and inferred["one"].nullable
+    for v in t.versions():
+        df, jobs = count_jobs(lambda: t.read(v))
+        assert jobs == 0, (v, jobs)
+        assert df.schema == inferred, v
+    want = (
+        base.join(upd.select("o_orderkey"), "o_orderkey", "left_anti")
+        .unionByName(upd)
+        .where(F.col("o_orderkey") % 10 != 0)
+    )
+    assert sorted(t.read().collect()) == sorted(want.collect())
+
+
+def test_legacy_manifest_without_schema_reads_by_inference(spark, orders_small, tmp_path):
+    """A manifest written before the schema was recorded still reads,
+    inferring the schema from the files."""
+    t = TxTable(spark, str(tmp_path / "tbl"))
+    t.create(orders_small, n_files=2)
+    m = t.manifest(0)
+    del m["schema"]
+    with open(t._manifest_path(0), "w") as fh:
+        json.dump(m, fh)
+    df = t.read()
+    assert [f.name for f in df.schema] == ["o_orderkey", "o_totalprice"]
+    assert sorted(df.collect()) == sorted(orders_small.collect())
