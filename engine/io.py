@@ -73,6 +73,10 @@ SESSION_CONF = {
     "spark.sql.codegen.maxFields": "256",
 }
 
+#: Entries of Spark's generated-class cache in a ``get_spark`` session
+#: (a static conf: builder only, see :func:`get_spark`).
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def tmpdir(prefix: str) -> str:
     """mkdtemp with atexit cleanup — scratch dirs (stream inputs, snapshot
@@ -280,11 +284,36 @@ def apply_bench_confs(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     return confs
 
 
+def _default_driver_mem() -> str:
+    """48g, or half of physical RAM when that is less: a 48g heap on a
+    15 GB host let the Tier-1 JVM grow until the kernel OOM-killed it."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(48 * 1024, half_mb)}m"
+
+
 def get_spark(app: str = "engine", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a local session sized for this machine.
 
     ``shuffle_partitions`` defaults to the core count — on a real cluster
     you would size it to ~2-3× total executor cores and let AQE coalesce.
+    The driver heap is ``$SPARK_GRAFT_DRIVER_MEM``, else
+    :func:`_default_driver_mem`.
+
+    Invariant: a warm pass over a mix of up to about 1,000 distinct
+    generated classes compiles nothing. Spark's Janino class cache
+    (``spark.sql.codegen.cache.maxEntries``, default 100) is LRU, and a
+    pass that cycles through more classes than it holds evicts each one
+    before its next use. A perfbench ``query_mix`` pass generates about
+    157 classes; at 100 entries every warm pass recompiled 133 of them,
+    at 1,000 it compiles 0 (``CodegenMetrics`` compilation count). One
+    pass over all 271 keys at sf0.01 generates about 2,980, so a pass
+    over the whole registry still recompiles. After that pass a full
+    1,000-entry cache held 4 MB more metaspace than 100 entries, and
+    perfbench's ``query_mix`` peak RSS fell 3%. The conf is static, so
+    it can only be set here, on the builder, and not in
+    ``SESSION_CONF``. Limit: a session not built by this function,
+    such as one the driver hands to ``__spark_entry__``, keeps Spark's
+    default of 100.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -292,7 +321,10 @@ def get_spark(app: str = "engine", shuffle_partitions: int | None = None) -> Spa
     b = (
         SparkSession.builder.appName(app)
         .master(f"local[{cpus}]")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         # bench_compare materializes BOTH engines' results as pandas frames
         # for timing symmetry; at sf100 win_sessionize's ~100M-row result is
         # >1 GiB of Arrow batches and the 1 GiB default kills the collect.
@@ -306,6 +338,7 @@ def get_spark(app: str = "engine", shuffle_partitions: int | None = None) -> Spa
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in SESSION_CONF.items():
         b = b.config(k, v)

@@ -3,8 +3,12 @@
 
 Usage: python scripts/time_key.py <key> [key ...] [--reps N]
 Times each key with the noop sink on a warmed bench-shaped session
-(input-sized confs, same as bench.py) and prints min/med/max. This is
-the inner loop for optimization A/Bs; the scored record stays bench.py.
+(input-sized confs, same as bench.py) and prints min/med/max, plus
+``compiles``: the Janino class compilations during the timed reps
+(Spark's ``CodegenMetrics`` count). A key compiles its classes once, in
+its first rep; a count that grows with ``--reps`` means the class cache
+evicts them and every rep recompiles. This is the inner loop for
+optimization A/Bs; the scored record stays bench.py.
 """
 
 from __future__ import annotations
@@ -36,11 +40,12 @@ def main() -> None:
     registry.load_all()
     spark, _ = harness_session(sf_dir, app="time_key")
     spark.range(1_000_000).count()  # JVM warm-up
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
     for key in ns.keys:
         fn = registry.QUERIES[key]
         spark.sparkContext.setJobDescription(f"time_key:{key}")
-        ts = []
+        ts, n0 = [], compiled.getCount()
         for _ in range(ns.reps):
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -48,7 +53,7 @@ def main() -> None:
         ts.sort()
         print(
             f"{key}: min={ts[0]:.4f} med={ts[len(ts) // 2]:.4f} max={ts[-1]:.4f} "
-            f"reps={ns.reps}"
+            f"reps={ns.reps} compiles={compiled.getCount() - n0}"
         )
         spark.sparkContext.setJobDescription(None)
 

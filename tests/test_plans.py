@@ -852,6 +852,47 @@ def test_session_conf_applied_once(spark, sf_dir, monkeypatch, tmp_path):
     assert calls == [s2], "configure ran more than once for one session"
 
 
+def test_session_conf_has_no_static_conf(spark):
+    """configure() applies SESSION_CONF with spark.conf.set, which raises
+    CANNOT_MODIFY_STATIC_CONFIG for a static conf; the codegen cache size
+    is static, so get_spark sets it on the builder instead."""
+    from engine import io
+
+    static = [k for k in io.SESSION_CONF if not spark.conf.isModifiable(k)]
+    assert not static, f"static confs in SESSION_CONF: {static}"
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        io.CODEGEN_CACHE_ENTRIES
+    )
+
+
+def test_codegen_cache_holds_query_mix_working_set(spark, sf_dir):
+    """A warm pass of perfbench's query_mix keys compiles no generated
+    class. The mix generates more classes than Spark's 100-entry default
+    cache holds, and with that cache every warm pass recompiled most of
+    them (140 of 159 here). The cache is emptied first, so the first
+    pass compiles the whole working set whatever earlier tests left in
+    it."""
+    from perfbench.workloads import QUERY_MIX
+
+    jvm = spark._jvm
+    field = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    ).getDeclaredField("cache")
+    field.setAccessible(True)
+    field.get(None).invalidateAll()
+    compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass() -> int:
+        n0 = compiled.getCount()
+        for k in QUERY_MIX:
+            registry.QUERIES[k](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return compiled.getCount() - n0
+
+    first, second = one_pass(), one_pass()
+    assert first > 100, f"the mix compiled only {first} classes; it no longer tests the cache"
+    assert second == 0, f"a warm pass recompiled {second} of {first} classes"
+
+
 def test_session_confs_restores_on_error(spark):
     """session_confs puts every old value back even when the body raises,
     and unsets a key that had no value before it."""
