@@ -114,7 +114,8 @@ def main() -> None:
         return reps
 
     def tight_at(dir_: str, rounds: int) -> dict[str, list[float]]:
-        # tight per-key loop (bench_compare's protocol): measures ISOLATED
+        # tight per-key loop (all reps of one key back to back, the
+        # protocol of BASELINE.md's v2 gate): measures ISOLATED
         # engine cost. The interleaved protocol above measures MIXED-
         # WORKLOAD latency — a sub-second key that runs right after the
         # heavy keys carries their JVM debt (GC pressure, code-cache
@@ -326,8 +327,8 @@ def main() -> None:
     # BENCH_DETAIL.json sidecar.
     here = os.path.dirname(os.path.abspath(__file__))
     # State-store A/B record (VERDICT r08 item 6 / r09 item 1): the A/B
-    # runs out-of-band (scripts/state_store_ab.py, ~1 h at sf10) and its
-    # committed sidecar is merged into the streaming block HERE so a
+    # ran out-of-band (~1 h at sf10) and STATE_STORE_AB.json is its
+    # committed record, merged into the streaming block HERE so a
     # routine bench.py re-run — which rewrites BENCH_DETAIL.json
     # wholesale — can never erase the recorded numbers.
     try:

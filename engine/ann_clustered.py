@@ -1,19 +1,20 @@
 """Clustered-corpus ANN evidence keys (VERDICT r04 item 4).
 
 Round 4 measured IVF/PQ recall on clustered vectors — the deployment
-shape, where real embedding corpora live — but only via numpy twins in
-scripts/ann_recall.py, outside the driver's hash gate. These two keys put
-that claim itself under driver verification: a deterministic clustered
-corpus is DERIVED from the fixture (so both engines can construct it
-bit-identically), the REGISTERED pipelines (engine/similarity.py:
-ivf_parts / pq_parts — the exact code paths of llm_ann_ivf / llm_ann_pq)
-run on it at the deployment operating point (48 learned cells ×
-nprobe=1 ≈ 3-4% scan from a DECORRELATED init; PQ shortlist = ceil(4%
-of corpus)), and the output carries recall + scan_frac columns computed
-against in-query brute force — so a green CORRECTNESS row IS the
-measured claim "recall ≥ 0.9 at ≤ 5% scan on clustered vectors"
-(prototyped this round with the decorrelated label: recall 1.000 both
-pipelines at 8×500 and 8×2000 corpus sizes).
+shape, where real embedding corpora live — but only via numpy twins,
+outside the driver's hash gate (BENCH.md § "r04 clustered-vector ANN
+recall"). These two keys put that claim itself under driver
+verification: a deterministic clustered corpus is DERIVED from the
+fixture (so both engines can construct it bit-identically), the
+REGISTERED pipelines (engine/similarity.py: ivf_parts / pq_parts — the
+exact code paths of llm_ann_ivf / llm_ann_pq) run on it at the
+deployment operating point (48 learned cells × nprobe=1 ≈ 3-4% scan
+from a DECORRELATED init; PQ shortlist = ceil(4% of corpus)), and the
+output carries recall + scan_frac columns computed against in-query
+brute force — so a green CORRECTNESS row IS the measured claim
+"recall ≥ 0.9 at ≤ 5% scan on clustered vectors" (prototyped this
+round with the decorrelated label: recall 1.000 both pipelines at
+8×500 and 8×2000 corpus sizes).
 
 Corpus construction (mirrored term-for-term in the DuckDB oracle):
 
@@ -38,9 +39,9 @@ Corpus construction (mirrored term-for-term in the DuckDB oracle):
   arithmetic + one double division, bit-identical across engines (a
   single LCG is affine in x, so adjacent dimensions would be linearly
   correlated; the product of two co-prime-modulus LCGs is not);
-- v[j] = cent(c, j) + 0.1 · noise(id, j): per-dim noise/signal ratio
-  0.1 → within-cluster cosine ≈ 0.99, cross-cluster ≈ 0 — the "tight
-  cluster" regime of real text-embedding corpora.
+- v[j] = cent(c, j) + _NOISE · noise(id, j) with _NOISE = 0.1: per-dim
+  noise/signal ratio 0.1 → within-cluster cosine ≈ 0.99, cross-cluster
+  ≈ 0 — the "tight cluster" regime of real text-embedding corpora.
 
 All heavy stages inherit the base pipelines' 100 TB shapes (broadcast
 centroids/codebooks/ADC, corpus never re-shuffled raw); the derived
@@ -72,6 +73,11 @@ _CELLS = 48
 _NPROBE = 1
 _ITERS = 2
 _SL_PCT = 4  # PQ shortlist = ceil(4% of corpus)
+#: per-dim noise/signal factor of the corpus, in both engines. Swept
+#: past it, the 48-cell pipeline kept recall 1.000 up to 0.2 at both
+#: corpus sizes (BENCH.md § "r08 session 2", clustered-ANN noise point);
+#: larger values blur cluster boundaries toward the isotropic worst case.
+_NOISE = 0.1
 
 
 def _mix_col(x, b1: int, b2: int):
@@ -82,13 +88,10 @@ def _mix_col(x, b1: int, b2: int):
     return (ha * hb) % F.lit(2001)
 
 
-def clustered_embeddings(e: DataFrame, noise: float = 0.1) -> DataFrame:
+def clustered_embeddings(e: DataFrame) -> DataFrame:
     """Derive the deterministic clustered corpus (vec_id, embedding)
-    from the fixture embeddings table — see module docstring. ``noise``
-    is the per-dim noise/signal factor (0.1 = the registered key's tight
-    regime; scripts/ann_clustered_noise.py measures the recall cliff at
-    0.2, VERDICT r05/r06/r07 item — higher values blur cluster
-    boundaries toward the isotropic worst case)."""
+    from the fixture embeddings table — see module docstring. The noise
+    factor is ``_NOISE``."""
     ids = (
         e.select(
             "vec_id",
@@ -111,7 +114,7 @@ def clustered_embeddings(e: DataFrame, noise: float = 0.1) -> DataFrame:
         nx = F.col("vec_id") * 64 + j.cast("long")
         cent = (_mix_col(cx, 11, 7) - 1000) / F.lit(1000.0)
         nz = (_mix_col(nx, 12345, 54321) - 1000) / F.lit(1000.0)
-        return cent + F.lit(noise) * nz
+        return cent + F.lit(_NOISE) * nz
 
     return ids.select("vec_id", F.transform(dims, val).alias("embedding"))
 
@@ -129,7 +132,7 @@ _SRC_SQL = f"""(
   SELECT vec_id,
          list_transform(range(0, 64), j ->
            (({_sql_mix("c * 64 + j", 11, 7)}) - 1000) / 1000.0
-           + 0.1 * ((({_sql_mix("vec_id * 64 + j", 12345, 54321)}) - 1000) / 1000.0)
+           + {_NOISE} * ((({_sql_mix("vec_id * 64 + j", 12345, 54321)}) - 1000) / 1000.0)
          ) AS embedding
   FROM (SELECT b.vec_id * {_REPL} + r.r AS vec_id,
                ({_sql_mix(f"b.vec_id * {_REPL} + r.r", *_LABEL_B)})

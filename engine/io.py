@@ -325,17 +325,6 @@ def get_spark(app: str = "engine", shuffle_partitions: int | None = None) -> Spa
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
         )
-        # bench_compare materializes BOTH engines' results as pandas frames
-        # for timing symmetry; at sf100 win_sessionize's ~100M-row result is
-        # >1 GiB of Arrow batches and the 1 GiB default kills the collect.
-        # Scoped to the harness that needs it (ADVICE r06): only honored
-        # when SPARK_GRAFT_MAX_RESULT is set (bench_compare sets 16g);
-        # engine/driver-gate sessions keep the 1g driver-OOM guard.
-        # Startup-only conf — ignored if getOrCreate reuses a session.
-        .config(
-            "spark.driver.maxResultSize",
-            os.environ.get("SPARK_GRAFT_MAX_RESULT", "1g"),
-        )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))

@@ -36,7 +36,6 @@ LAST_PROPAGATION_ROUNDS: int | None = None
 # deterministic hyperplanes (±1 Rademacher), shared by Spark and oracle SQL
 # ---------------------------------------------------------------------------
 
-_N_PLANES = 8
 _DIM = 64
 
 
@@ -48,8 +47,6 @@ def _plane(p: int) -> list[float]:
         out.append(1.0 if b & 1 else -1.0)
     return out
 
-
-_PLANES = [_plane(p) for p in range(_N_PLANES)]
 
 #: plane pool for the size-adaptive LSH bucketing (llm_ann_lsh): bits are
 #: taken from the FRONT of this pool, so a b-bit bucket is always the low-b
@@ -81,11 +78,11 @@ def _lsh_salts(n: int) -> int:
     return 1 if n < 500_000 else 8
 
 
-def _spark_bucket(emb_col: str, planes: list[list[float]] | None = None):
+def _spark_bucket(emb_col: str, planes: list[list[float]]):
     """LSH bucket id: bit j = sign(e · plane_j) over the given plane subset."""
     e = _dbl(emb_col)
     bucket = F.lit(0)
-    for j, plane in enumerate(planes if planes is not None else _PLANES):
+    for j, plane in enumerate(planes):
         plane_arr = F.array(*[F.lit(v) for v in plane])
         bucket = bucket + F.when(_dot(e, plane_arr) > 0, F.lit(1 << j)).otherwise(0)
     return bucket
@@ -95,9 +92,9 @@ def _sql_plane_lit(plane: list[float]) -> str:
     return "[" + ", ".join(f"{v:.1f}" for v in plane) + "]"
 
 
-def _sql_bucket(emb: str, planes: list[list[float]] | None = None) -> str:
+def _sql_bucket(emb: str, planes: list[list[float]]) -> str:
     terms = []
-    for j, plane in enumerate(planes if planes is not None else _PLANES):
+    for j, plane in enumerate(planes):
         terms.append(
             f"(CASE WHEN list_dot_product(list_transform({emb}, x -> CAST(x AS DOUBLE)),"
             f" {_sql_plane_lit(plane)}) > 0 THEN {1 << j} ELSE 0 END)"
@@ -535,13 +532,14 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     each query probes its nprobe=2 nearest cells, exact cosine only
     within the probed cells, top-3.
 
-    r03 upgrade, measured (scripts/ann_recall.py at sf0.1): the round-2
-    design used LABEL cells, but the fixture's labels carry ZERO
-    geometric signal (within-label mean cos ≈ 0.000, identical to
-    global — the vectors are isotropic), so label-probing was a random
-    20% sample: recall@3 = 0.283 ≈ the scan fraction. Learned cells at
-    the SAME nprobe=2 / 20% scan reach recall@3 = 0.417 (1.5×) because
-    k-means caps align with actual geometry even on isotropic data.
+    r03 upgrade, measured at sf0.1 (BENCH.md § "r03 IVF learned coarse
+    quantizer"): the round-2 design used LABEL cells, but the fixture's
+    labels carry ZERO geometric signal (within-label mean cos ≈ 0.000,
+    identical to global — the vectors are isotropic), so label-probing
+    was a random 20% sample: recall@3 = 0.283 ≈ the scan fraction.
+    Learned cells at the SAME nprobe=2 / 20% scan reach recall@3 = 0.383
+    (1.35×) because k-means caps align with actual geometry even on
+    isotropic data.
     This is the honest IVF: in production the coarse quantizer is
     always trained, never a metadata column.
 
@@ -636,14 +634,15 @@ def ivf_parts(
 #: cos 0.35-0.5, where collision probability per plane is only ~0.6 —
 #: recall there is bought with MANY narrow bands, not a few wide ones.
 #: Measured on sf0.1 against the brute-force truth (4137 pairs ≥ τ) with
-#: scripts/lsh_sweep.py (bit-identical numpy twin of this band stage):
-#: round-1's 2 bands × 4 bits = 0.285 recall / 248k candidates;
-#: round-2's 12×6 = 0.532 recall / 365k; this 20×6 = 0.715 recall /
-#: 559k — r03's full frontier is recorded in BENCH.md. Wider bands lose
-#: (7 bits needs 24+ bands to match 6×12's recall); narrower bands (5
-#: bits) buy recall with ~2× the candidates per band. Affordable because
-#: candidate verification is a per-bucket normalized matmul
-#: (_banded_tau_pairs), not per-pair work.
+#: a bit-identical numpy twin of this band stage (BENCH.md § "r03
+#: banded-LSH recall frontier" holds the full frontier): round-2's 12×6
+#: = 0.532 recall / 365k candidates; this 20×6 = 0.715 recall / 559k.
+#: Round-1's 2 bands × 4 bits read 0.285 recall (BENCH.md § "r02
+#: similarity-path rework"; its 248k candidate count has no committed
+#: record and is unverified). Wider bands lose (7 bits needs 24+ bands
+#: to match 6×12's recall); narrower bands (5 bits) buy recall with ~2×
+#: the candidates per band. Affordable because candidate verification is
+#: a per-bucket normalized matmul (_banded_tau_pairs), not per-pair work.
 #: The dial at 100 TB: bits per band ∝ log(n) keeps buckets bounded;
 #: band count buys recall linearly in cost.
 _N_BAND_BITS = 6
@@ -705,11 +704,12 @@ def _band_ids_udf():
 
 
 #: Skew guard: buckets larger than this are dropped from candidate
-#: generation entirely (promoted from stress.py's 10× probe, where one
-#: concentrated bucket went quadratic). The cap is far above any real
-#: duplicate-cluster size, so recall on actual duplicates is unaffected —
-#: an over-full bucket means the band is too coarse for the local density,
-#: and its pairs are overwhelmingly false candidates. Applied by
+#: generation entirely (promoted from the 10× scale probe, where one
+#: concentrated bucket went quadratic: BENCH.md § "10× scale headroom").
+#: The cap is far above any real duplicate-cluster size, so recall on
+#: actual duplicates is unaffected — an over-full bucket means the band
+#: is too coarse for the local density, and its pairs are overwhelmingly
+#: false candidates. Applied by
 #: _banded_tau_pairs (the kernel's ``cap``) and interpolated into the
 #: oracle SQL (msz/mc CTEs); a no-op at fixture scale by construction.
 #: A capped bucket fits one kernel block, so it is one 512×512 matmul.

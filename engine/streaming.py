@@ -441,16 +441,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state store EVICT old rows instead of growing forever (the required
     shape for stream-stream joins at scale). Result ≡ the batch range
     join on the same data."""
-    return _run_to_memory(stream_stream_join_plan(spark, sf_dir), "append")
-
-
-def stream_stream_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The unstarted streaming plan behind `stream_stream_join` — split
-    out (r11) so the heap-ceiling witness can sink it to `noop` instead
-    of the key's memory sink: a bounded-heap provider A/B must keep the
-    JOIN BUFFER STATE as the only heap consumer that varies, and a
-    memory sink would add an output-proportional driver allocation that
-    could OOM first and contaminate the attribution."""
     s1 = _read_stream(spark, sf_dir).where(F.col("event_type") == "purchase")
     s2 = _read_stream(spark, sf_dir).where(F.col("event_type") == "click")
     p = (
@@ -477,7 +467,7 @@ def stream_stream_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
     ).select("purchase_id", "click_id", F.col("p_user").alias("user_id"))
-    return j
+    return _run_to_memory(j, "append")
 
 
 @query(

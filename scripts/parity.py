@@ -16,11 +16,17 @@ One flag per use:
   by-name closures);
 - the targeted re-check after a fix: ``--keys a,b`` at every fixture dir
   the fix must hold at;
-- the partitioning-invariance audit: ``--partitions 13`` reruns the
-  sweep at an adversarial prime shuffle-partition count. Every emitted
-  value is meant to be independent of physical execution (exact integer
-  cents, snapped averages, total-order tie breaks), so a key whose
-  output depended on partition boundaries would change its hash here;
+- the conf-differential audit: ``--conf KEY=VALUE`` (repeatable) sets
+  session confs after the session is built and reruns the sweep under
+  them. ``--conf spark.sql.shuffle.partitions=13`` is the
+  partitioning-invariance audit at an adversarial prime partition count;
+  ``spark.sql.adaptive.enabled=false``,
+  ``spark.sql.codegen.wholeStage=false`` and
+  ``spark.sql.execution.arrow.maxRecordsPerBatch=7`` vary the planner,
+  codegen and Arrow batching the same way. Every emitted value is meant
+  to be independent of physical execution (exact integer cents, snapped
+  averages, total-order tie breaks), so a key whose output depended on
+  partition boundaries or batch sizes would change its hash here;
 - the scaled sweep: pass a scaled fixture dir (``scripts/make_scaled.py``)
   to catch agreement that only held because the small fixtures were small.
 
@@ -30,7 +36,7 @@ flushed per key, so a crash still shows what was covered. One ``RESULT``
 line ends the run; the exit code is 1 on any failure or error.
 
 Usage: python scripts/parity.py [sf_dir ...] [--keys a,b | --slice START:END]
-                                [--partitions N]
+                                [--conf KEY=VALUE ...]
 """
 
 from __future__ import annotations
@@ -50,6 +56,13 @@ def _slice(text: str) -> slice:
     return slice(int(start) if start else None, int(end) if end else None)
 
 
+def _conf(text: str) -> tuple[str, str]:
+    key, sep, value = text.partition("=")
+    if not sep or not key:
+        raise argparse.ArgumentTypeError(f"expected KEY=VALUE, got {text!r}")
+    return key, value
+
+
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description="DuckDB parity sweep over registered keys.")
     ap.add_argument(
@@ -58,8 +71,17 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     pick = ap.add_mutually_exclusive_group()
     pick.add_argument("--keys", help="comma-separated keys (default: all)")
     pick.add_argument("--slice", type=_slice, help="START:END over the queries() order")
-    ap.add_argument("--partitions", type=int, help="session shuffle partitions")
-    return ap.parse_args(argv)
+    ap.add_argument(
+        "--conf",
+        type=_conf,
+        action="append",
+        default=[],
+        metavar="KEY=VALUE",
+        help="session conf set after the session is built (repeatable)",
+    )
+    ns = ap.parse_args(argv)
+    ns.conf = dict(ns.conf)
+    return ns
 
 
 def main() -> None:
@@ -80,8 +102,10 @@ def main() -> None:
     else:
         names = list(queries)[ns.slice or slice(None)]
 
-    spark = get_spark(app="parity", shuffle_partitions=ns.partitions)
+    spark = get_spark(app="parity")
     spark.sparkContext.setLogLevel("ERROR")
+    for k, v in ns.conf.items():
+        spark.conf.set(k, v)
 
     sf_dirs = ns.sf_dirs or [DEFAULT_SF_DIR]
     ok = checked = rows_only = failures = errors = 0
@@ -115,8 +139,8 @@ def main() -> None:
     total = len(names) * len(sf_dirs)
     print(
         f"RESULT ok={ok}/{total} checked={checked} rows_only={rows_only} "
-        f"failures={failures} errors={errors} partitions="
-        f"{spark.conf.get('spark.sql.shuffle.partitions')} bad={bad} "
+        f"failures={failures} errors={errors} "
+        f"confs={ {k: spark.conf.get(k) for k in ns.conf} } bad={bad} "
         f"total={time.time() - t_all:.0f}s",
         flush=True,
     )

@@ -9,7 +9,7 @@ value v (nullable string), tracked value w (nullable int).
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -189,9 +189,10 @@ def test_scd2_intervals_partition_time(spark, sf_dir):
 @given(data=rows)
 @common
 def test_dedup_extract_latest_wins(spark, data):
-    """dedup_extract keeps exactly the highest (order, tiebreak) row/key."""
-    if not data:
-        pytest.skip("empty")
+    """dedup_extract keeps exactly the highest (order, tiebreak) row/key.
+    ``assume`` rejects the empty row list (derandomized, it is the first
+    example); a ``pytest.skip`` here would skip the whole test."""
+    assume(data)
     df = spark.createDataFrame(data, SCHEMA).withColumn(
         "seq", F.monotonically_increasing_id()
     )

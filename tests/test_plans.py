@@ -928,6 +928,54 @@ def test_time_key_args():
         assert exc.value.code == 2
 
 
+def test_parity_conf_args():
+    """scripts/parity.py: repeated --conf KEY=VALUE flags parse to one
+    dict (a value may itself contain '='); a --conf without '=' is a
+    usage error."""
+    import pytest
+
+    from scripts import parity
+
+    ns = parity.parse_args(["--conf", "spark.sql.shuffle.partitions=13", "--conf", "a.b=x=y"])
+    assert ns.conf == {"spark.sql.shuffle.partitions": "13", "a.b": "x=y"}
+    assert parity.parse_args([]).conf == {}
+    with pytest.raises(SystemExit) as exc:
+        parity.parse_args(["--conf", "x"])
+    assert exc.value.code == 2
+
+
+def test_plan_audit_smoke(spark, sf_dir, tmp_path):
+    """scripts/plan_audit.py end to end on two batch keys and one
+    streaming key: the JSON record carries the plan statistics for the
+    batch keys and a skip for the streaming key, and each batch key's
+    formatted plan is written next to it."""
+    import json
+
+    from engine.io import session_confs
+    from scripts import plan_audit
+
+    batch = ["agg_pricing_summary", "cdc_snapshot_diff"]
+    # the tool builds a bench-shaped session, which is this shared one:
+    # restore the input-sized confs it sets
+    bench_keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.files.maxPartitionBytes",
+        "spark.sql.adaptive.enabled",
+    )
+    with session_confs(spark, {k: spark.conf.get(k) for k in bench_keys}):
+        plan_audit.main([sf_dir, *batch, "stream_stream_join", "--out", str(tmp_path)])
+    with open(tmp_path / "plan_audit.json") as f:
+        audit = json.load(f)
+    assert sorted(audit) == sorted(batch + ["stream_stream_join"])
+    assert "skipped" in audit["stream_stream_join"]
+    assert not (tmp_path / "stream_stream_join.txt").exists()
+    for key in batch:
+        assert {"exchanges", "python_nodes", "joins"} <= set(audit[key]), audit[key]
+        text = (tmp_path / f"{key}.txt").read_text()
+        assert "== Physical Plan ==" in text
+    assert audit["cdc_snapshot_diff"]["joins"]
+
+
 def test_pagerank_fact_pass_runs_once(spark, sf_dir):
     """graph_pagerank derives the nation graph in ONE distributed fact
     pass materialized via localCheckpoint; the 6 rank iterations must
